@@ -8,9 +8,9 @@ invocation eventually produces a full set of clean, mutually-attributable
 artifacts:
 
   1. bench_scaling 300k x2   — the north-rule same-JVM N-vs-4N pair
-  2. bench.py + bench_phases — the attributable single-window bench re-run
-     (VERDICT round-3 #2): headline metrics and per-phase timings from the
-     SAME window, so any regression localizes to a phase
+  2. bench.py                — the single-window bench re-run (VERDICT
+     round-3 #2); per-layer build attribution comes from
+     `perfbench/run.py --trace 1`
   3. bench_concurrency 300k  — aggregate(4x local[8]) vs local[32] vs
      4x solo local[8]: the box-vs-engine verdict
   4. bench_jvm_ab 300k       — GC / shuffle-buffer / codec A/B inside one
@@ -63,7 +63,6 @@ def main() -> None:
         ("scaling", [py, "scripts/bench_scaling.py", "300000", "2",
                      "--clean-pairs=1800"], 7200),
         ("bench", [py, "bench.py"], 3600),
-        ("phases", [py, "scripts/bench_phases.py", "300000"], 3600),
         ("concurrency", [py, "scripts/bench_concurrency.py", "300000", "1"], 4800),
         ("jvm_ab", [py, "scripts/bench_jvm_ab.py", "300000", "1"], 4800),
     ]

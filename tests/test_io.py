@@ -52,3 +52,47 @@ def test_append_driver_rows_roundtrip(spark, tmp_path):
     assert {(r["batch_id"], r["status"], r["secs"]) for r in back.collect()} == {
         (0, "done", 0.5), (1, "done", 1.5), (2, "failed", None)
     }
+
+
+def test_driver_writes_resolve_scheme_less_paths_through_default_fs(spark, tmp_path):
+    """A scheme-less dest means whatever fs.defaultFS says, exactly as for
+    Spark's own reads and writes. Here defaultFS is a viewfs mount table (a
+    non-'file' scheme) linking tmp_path/virt to tmp_path/real: the driver
+    must not write the literal local path, and the rows must land where
+    Spark reads them back."""
+    from webindex.io import append_driver_rows, write_driver_table
+
+    virt, real = tmp_path / "virt", tmp_path / "real"
+    real.mkdir()
+    conf = spark._jsc.hadoopConfiguration()
+    saved = conf.get("fs.defaultFS")
+    # a per-test mount-table name: the FileSystem cache keys on it
+    mount = f"wi{tmp_path.name.replace('_', '')}"
+    link = f"fs.viewfs.mounttable.{mount}.link.{virt}"
+    conf.set(link, real.as_uri())
+    conf.set("fs.defaultFS", f"viewfs://{mount}/")
+    try:
+        append_driver_rows(
+            spark, [(1, "done")], "batch_id long, status string",
+            f"{virt}/lineage", fmt="parquet",
+        )
+        write_driver_table(spark, [(7,)], "n long", f"{virt}/stats", fmt="parquet")
+        lineage = spark.read.parquet(f"{virt}/lineage").collect()
+        stats = spark.read.parquet(f"{virt}/stats").collect()
+    finally:
+        conf.set("fs.defaultFS", saved)
+        conf.unset(link)
+    assert not virt.exists()
+    assert [(r["batch_id"], r["status"]) for r in lineage] == [(1, "done")]
+    assert [r["n"] for r in stats] == [7]
+    assert (real / "lineage").is_dir() and (real / "stats").is_dir()
+
+
+def test_append_driver_rows_honours_iceberg_format(spark, tmp_path):
+    """The Spark fallback appends in the requested format: iceberg without
+    the runtime fails loudly instead of writing a parquet directory."""
+    from webindex.io import append_driver_rows
+
+    with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
+        append_driver_rows(spark, [(1,)], "n long", "cat.db.t", fmt="iceberg")
+    assert not (tmp_path / "cat.db.t").exists()

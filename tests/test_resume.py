@@ -2,6 +2,7 @@
 assert the final index equals a clean run's; lineage metrics recorded."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,6 +15,15 @@ def _postings_map(idx):
         (r["term_hash"], r["block_id"]): (bytes(r["doc_ids"]), bytes(r["tfs"]), r["max_impact"])
         for r in idx.postings.collect()
     }
+
+
+def _rows(df):
+    """Every row of a table as a sorted list of plain tuples (binary columns
+    as bytes), for whole-table equality."""
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+        for r in df.collect()
+    )
 
 
 def test_resume_matches_clean_run(spark, tmp_path):
@@ -72,6 +82,20 @@ def test_resume_matches_clean_run(spark, tmp_path):
         )
         assert r["bytes"] == disk and disk > 0
 
+    # the resumable build runs build_index's own post-tokenize tail: over the
+    # same pages both commit the same tables, sidecars included
+    from webindex.build import build_index
+    from webindex.io import read_table
+
+    batch_dir = str(tmp_path / "batch")
+    build_index(spark, pages, out_dir=batch_dir)
+    for table in (
+        "postings", "term_stats", "doc_stats", "url_index", "corpus_stats", "conf",
+    ):
+        got = _rows(read_table(spark, f"{workdir}/index/{table}"))
+        want = _rows(read_table(spark, f"{batch_dir}/{table}"))
+        assert got == want and got, table
+
 
 def test_second_resume_is_noop_fast(spark, tmp_path):
     pdf = make_pages_pdf(0, 60)
@@ -108,3 +132,41 @@ def test_resumable_build_under_pathological_hash(spark, tmp_path):
         a = [(r["doc_id"], round(r["score"], 9)) for r in topk_exact(idx, q, 10).collect()]
         b = [(r["doc_id"], round(r["score"], 9)) for r in topk_exact(normal, q, 10).collect()]
         assert a == b, q
+
+
+def test_resumable_build_rejects_duplicate_url_like_build_index(spark, tmp_path):
+    """A duplicated url (two doc rows on one doc_id) fails both builds with
+    the same error — the resumable path must not commit n_docs beside a
+    doc_stats table holding extra rows."""
+    from webindex.build import build_index
+
+    pdf = make_pages_pdf(0, 20)
+    pages = spark.createDataFrame(pd.concat([pdf, pdf.iloc[[3]]], ignore_index=True))
+    with pytest.raises(RuntimeError, match="duplicate url") as batch_err:
+        build_index(spark, pages, out_dir=str(tmp_path / "batch"))
+    with pytest.raises(RuntimeError, match="duplicate url") as resumable_err:
+        build_index_resumable(
+            spark, pages, str(tmp_path / "resumable"), n_buckets=4, chunk_buckets=2
+        )
+    assert str(resumable_err.value) == str(batch_err.value)
+
+
+def test_failed_write_chain_keeps_previous_corpus_stats(spark, tmp_path, monkeypatch):
+    """The index tail commits corpus_stats only after every table chain
+    has finished: a chain that raises leaves the previous build's stats in
+    place instead of new stats beside half-written tables."""
+    from webindex import build
+    from webindex.io import read_table
+
+    out = str(tmp_path / "idx")
+    build.build_index(spark, spark.createDataFrame(make_pages_pdf(0, 20)), out_dir=out)
+
+    def _boom(_term_stats):
+        raise RuntimeError("injected write-chain failure")
+
+    monkeypatch.setattr(build, "build_term_grams", _boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        build.build_index(
+            spark, spark.createDataFrame(make_pages_pdf(0, 30)), out_dir=out
+        )
+    assert read_table(spark, f"{out}/corpus_stats").collect()[0]["n_docs"] == 20

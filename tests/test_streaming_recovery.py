@@ -1,7 +1,11 @@
 """Crash/ordering hardening of the incremental index (round-4 review):
 engine-epoch vs synthetic-batch decoupling, ghost doc_stats rows in emptied
 buckets, the interrupted-compact fence, n_buckets pinning on the resumable
-build, caller-supplied doc_id rejection, and conf restore on full compacts."""
+build, caller-supplied doc_id rejection, conf restore on full compacts,
+stale staging dirs, and the corpus_stats commit order."""
+
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -156,3 +160,42 @@ def test_finish_tables_crash_window_recovers(spark, tmp_path):
     idx2 = reopened.compact()
     assert idx2.n_docs == 18
     assert len(topk(idx2, "data", 5).collect()) == 5
+
+
+def test_stale_staging_is_cleared_before_incremental_compact(spark, tmp_path):
+    """A crash between staging and swap leaves bucket dirs in the staging
+    tables. The next incremental compact must clear them before it stages,
+    not swap them in as ghost doc_stats rows."""
+    wd = str(tmp_path / "wd")
+    ing = IncrementalIndexer(spark, wd, text_col="text")
+    ing.upsert(_pages(spark, 0, 20))
+    out = f"{wd}/index"
+    committed = next(
+        d for d in os.listdir(f"{out}/doc_stats") if d.startswith("bucket=")
+    )
+    shutil.copytree(
+        f"{out}/doc_stats/{committed}", f"{out}/_doc_stats_staging/bucket=999"
+    )
+    idx = ing.upsert(_pages(spark, 20, 22))
+    assert idx.n_docs == 22
+    assert idx.doc_stats.count() == idx.n_docs
+
+
+def test_failed_full_compact_keeps_previous_corpus_stats(spark, tmp_path, monkeypatch):
+    """compact(full=True) commits corpus_stats only after its table chains:
+    a chain that raises leaves the previous stats in place."""
+    import webindex.streaming as streaming
+
+    wd = str(tmp_path / "wd")
+    ing = IncrementalIndexer(spark, wd, text_col="text")
+    ing.upsert(_pages(spark, 0, 12))
+    ing.upsert(_pages(spark, 12, 16), compact_now=False)
+
+    def _boom(*args, **kwargs):
+        raise RuntimeError("injected write-chain failure")
+
+    monkeypatch.setattr(streaming, "build_postings", _boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        ing.compact(full=True)
+    stats = spark.read.parquet(f"{wd}/index/corpus_stats").collect()
+    assert stats[0]["n_docs"] == 12

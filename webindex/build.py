@@ -53,9 +53,11 @@ N_URL_BUCKETS = 64
 def url_index_projection(doc_stats: DataFrame) -> DataFrame:
     """The (doc_id, url, doc_len, url_hash, url_bucket) reverse-lookup
     projection — the ONE definition of the pmod/xxhash bucket contract
-    `query.lookup_url` prunes against. Both index writers (build_index and
-    checkpoint.build_index_resumable) derive their url_index table from
-    this; write it url_hash-sorted within url_bucket partitions."""
+    `query.lookup_url` prunes against. The shared index tail
+    (`_index_from_runs`, behind build_index and
+    checkpoint.build_index_resumable) derives the url_index table from the
+    committed doc_stats through this, url_hash-sorted within url_bucket
+    partitions."""
     return doc_stats.select(
         "doc_id",
         "url",
@@ -911,9 +913,10 @@ def build_index(
     pages, so at 100 TB prefer deduplicating upstream in the crawl store.
 
     Job shape: (1) runs + stats (one tokenize pass, persisted so nothing
-    re-tokenizes), then (2) the (term,bucket) shuffle into compressed blocks
-    overlapped with the small dictionary/doc-table writes on a driver thread
-    pool (guide §2.6 — independent chains back-fill each other's tails).
+    re-tokenizes), then (2) the shared tail `_index_from_runs`: the
+    (term,bucket) shuffle into compressed blocks overlapped with the small
+    dictionary/doc-table writes on a driver thread pool (guide §2.6 —
+    independent chains back-fill each other's tails).
     """
     if id_space is None:
         id_space = "hash" if doc_id_method == "hash" else "dense"
@@ -950,18 +953,55 @@ def build_index(
     elif runs_persist:
         runs = runs.persist()
 
-    doc_stats = build_doc_stats(pages, runs)
+    idx = _index_from_runs(
+        spark, runs, build_doc_stats(pages, runs), conf,
+        range_width=range_width, id_space=id_space, out_dir=out_dir,
+        hash_primary_fn=hash_primary_fn,
+    )
+    if not out_dir and runs_persist:
+        runs.unpersist()
+    return idx
 
-    # ONE combined pass over runs yields the vocabulary AND the corpus stats
-    # (see vocab_and_corpus_agg), persisted vocab-sized and reused for
-    # (a) pre-shuffle collision resolution — a remapped key for the rare
-    # xxhash64 clash instead of a post-hoc abort — and (b) the term_stats
-    # table. Neither consumer re-scans runs' (term,doc) pairs.
-    vocab_df, _vocab_handle, n_docs, avgdl = vocab_and_corpus_agg(runs)
 
-    if range_width is None:
-        range_width = adaptive_range_width(n_docs)
+def dict_file_target(n_docs: int) -> int:
+    """File-count target for the dictionary-shaped tables (term_stats,
+    term_grams, doc_stats), derived from DATA size only (n_docs), never
+    cluster size: sorted point/IN lookups want few, fat, fully key-sorted
+    files (one at bench scales; ~2M docs' worth of rows per file at web
+    scale — the hash-partitioned alternative leaves every file's key range
+    overlapping, so nothing can be file-pruned)."""
+    return max(1, n_docs // 2_000_000)
 
+
+def overlap_chains(*chains):
+    """Run independent table-write chains on a driver thread pool (guide
+    §2.6): a chain's task tail back-fills the others' instead of extending
+    the commit. Determinism is untouched (each chain's lineage is
+    unchanged; FIFO scheduling just interleaves their tasks). Returns the
+    chains' results in order; the first failure propagates once every chain
+    has finished."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(chains)) as pool:
+        futs = [pool.submit(c) for c in chains]
+        return [f.result() for f in futs]
+
+
+def _vocab_prelude(
+    runs: DataFrame, range_width: int | None, hash_primary_fn=None
+) -> tuple[DataFrame, DataFrame, int, float, int, dict[str, int]]:
+    """The post-tokenize prelude every full index writer shares (build,
+    resumable build, full compaction). ONE combined pass over runs yields
+    the vocabulary AND the corpus stats (vocab_and_corpus_agg), persisted
+    vocab-sized and reused for (a) pre-shuffle collision resolution — a
+    remapped key for the rare xxhash64 clash instead of a post-hoc abort —
+    and (b) the term_stats frame. Neither consumer re-scans runs'
+    (term,doc) pairs.
+
+    Returns (term_stats, vocab_handle — caller unpersists it when done,
+    n_docs, avgdl, range_width — adaptive unless pinned, hash_remap)."""
+    vocab_df, vocab_handle, n_docs, avgdl = vocab_and_corpus_agg(runs)
+    range_width = range_width or adaptive_range_width(n_docs)
     _, hash_remap = resolve_term_hashes(vocab_df, primary_fn=hash_primary_fn)
     term_stats = _with_idf(
         vocab_df.withColumn(
@@ -969,12 +1009,36 @@ def build_index(
         ),
         n_docs,
     )
+    return term_stats, vocab_handle, n_docs, avgdl, range_width, hash_remap
 
+
+def _index_from_runs(
+    spark: SparkSession,
+    runs: DataFrame,
+    doc_stats: DataFrame,
+    conf: BM25Config,
+    *,
+    range_width: int | None,
+    id_space: str,
+    out_dir: str | None,
+    hash_primary_fn=None,
+) -> Index:
+    """The ONE post-tokenize tail of the batch index writers (build_index
+    and checkpoint.build_index_resumable): vocab prelude, the (term,bucket)
+    shuffle into compressed blocks, then either the overlapped table commit
+    under out_dir or, with out_dir=None, an in-memory materialization.
+
+    Commit order: the three table chains first, the one-row corpus_stats /
+    conf sidecars LAST — a failed chain leaves the previous sidecars in
+    place, never new stats beside tables they do not describe."""
+    term_stats, vocab_handle, n_docs, avgdl, range_width, hash_remap = (
+        _vocab_prelude(runs, range_width, hash_primary_fn)
+    )
     postings = build_postings(
         runs, avgdl, conf, range_width, n_docs=n_docs, id_space=id_space,
         hash_remap=hash_remap, hash_primary_fn=hash_primary_fn,
     )
-
+    url_stats = term_grams = None
     if out_dir:
         # term-clustered layout: each shuffle partition (already hash-keyed by
         # (term_hash,bucket) from the encode groupBy) is SORTED by term_hash
@@ -986,27 +1050,14 @@ def build_index(
         # metadata, not the plan. All table writes go through io.write_table
         # (parquet here; Iceberg = WEBINDEX_TABLE_FORMAT=iceberg + a catalog).
         #
-        # Round-6 job overlap (optimization guide §2.6): once runs are on
-        # disk and the vocab aggregate is resolved, the remaining writes are
-        # FOUR independent chains — (postings), (term_stats -> term_grams),
-        # (doc_stats -> docid check -> url_index), (one-row sidecars). They
-        # used to run serially, so the small metadata chains added their
-        # full job latency to every build and the cluster idled through each
-        # one's tail. A 3-thread pool overlaps them: the small chains fill
-        # the postings shuffle's straggler tail instead of extending the
-        # build. Determinism is untouched (each chain's lineage is
-        # unchanged; FIFO scheduling just interleaves their tasks).
-        from concurrent.futures import ThreadPoolExecutor
-
+        # Once runs are on disk and the vocab aggregate is resolved, the
+        # remaining writes are independent chains — (postings),
+        # (term_stats -> term_grams), (doc_stats -> docid check ->
+        # url_index) — overlapped so the small chains fill the postings
+        # shuffle's straggler tail instead of extending the build.
         from webindex.io import read_table, write_driver_table, write_table
 
-        # file-count target for the dictionary-shaped tables, derived from
-        # DATA size only (n_docs), never cluster size: sorted point/IN
-        # lookups want few, fat, fully key-sorted files (one at bench
-        # scales; ~2M docs' worth of rows per file at web scale — the
-        # hash-partitioned alternative leaves every file's key range
-        # overlapping, so nothing can be file-pruned).
-        dict_files = max(1, n_docs // 2_000_000)
+        dict_files = dict_file_target(n_docs)
 
         def _write_postings() -> None:
             write_table(
@@ -1016,11 +1067,10 @@ def build_index(
 
         def _write_terms() -> None:
             # term_stats doubles as the term dictionary: the vocab aggregate
-            # above yields (term, term_hash, df) together. Keys are
-            # collision-free BY CONSTRUCTION — resolve_term_hashes ran
-            # pre-shuffle and raises on any unresolved clash — so the old
-            # assert_no_hash_collisions re-scan here was a provably
-            # redundant extra job, dropped in round 6.
+            # yields (term, term_hash, df) together. Keys are collision-free
+            # BY CONSTRUCTION — resolve_term_hashes ran pre-shuffle and
+            # raises on any unresolved clash — so no post-write
+            # assert_no_hash_collisions re-scan is needed.
             write_table(
                 term_stats, f"{out_dir}/term_stats", sort_cols=["term"],
                 coalesce=dict_files,
@@ -1072,6 +1122,8 @@ def build_index(
             )
             return committed
 
+        _, _, doc_stats = overlap_chains(_write_postings, _write_terms, _write_docs)
+        vocab_handle.unpersist()
         # one-row sidecars are driver-side writes (no Spark job; see
         # write_driver_table). conf: layout facts baked into the blocks
         # (k1/b feed max_impact; quantize_norms changes the doc_lens byte
@@ -1090,29 +1142,19 @@ def build_index(
             schema.INDEX_CONF,
             f"{out_dir}/conf",
         )
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_post = pool.submit(_write_postings)
-            f_terms = pool.submit(_write_terms)
-            f_docs = pool.submit(_write_docs)
-            f_post.result()
-            f_terms.result()
-            doc_stats = f_docs.result()
         postings = read_table(spark, f"{out_dir}/postings")
         term_stats = read_table(spark, f"{out_dir}/term_stats")
-        _vocab_handle.unpersist()
+        url_stats = read_table(spark, f"{out_dir}/url_index")
+        term_grams = read_table(spark, f"{out_dir}/term_grams")
     else:
-        # materialize the index once — queries must never re-run the build.
-        # (assert_no_hash_collisions dropped here too: resolve_term_hashes
-        # ran pre-shuffle and already guarantees a collision-free dict.)
+        # materialize the index once — queries must never re-run the build
         postings = postings.persist()
         postings.count()
         term_stats = term_stats.persist()
         doc_stats = doc_stats.persist()
         term_stats.count()
         assert_no_docid_collisions(doc_stats)
-        _vocab_handle.unpersist()
-        if runs_persist:
-            runs.unpersist()
+        vocab_handle.unpersist()
 
     return Index(
         postings=postings,
@@ -1122,10 +1164,8 @@ def build_index(
         avgdl=avgdl,
         conf=conf,
         range_width=range_width,
-        url_stats=(read_table(spark, f"{out_dir}/url_index") if out_dir else None),
-        term_grams=(
-            read_table(spark, f"{out_dir}/term_grams") if out_dir else None
-        ),
+        url_stats=url_stats,
+        term_grams=term_grams,
         id_space=id_space,
         bucket_bits=(
             hash_bucket_bits(n_docs, range_width) if id_space == "hash" else None

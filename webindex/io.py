@@ -45,6 +45,16 @@ def _iceberg_available(spark) -> bool:
         return False
 
 
+def _require_iceberg(spark) -> None:
+    if not _iceberg_available(spark):
+        raise RuntimeError(
+            "WEBINDEX_TABLE_FORMAT=iceberg but the Iceberg runtime is not "
+            "on the classpath. Add iceberg-spark-runtime to spark.jars and "
+            "configure spark.sql.catalog.<name>=org.apache.iceberg.spark."
+            "SparkCatalog; dest must then be a catalog table name."
+        )
+
+
 def write_table(
     df: DataFrame,
     dest: str,
@@ -87,13 +97,7 @@ def write_table(
         w.parquet(dest)
         return
     if fmt == "iceberg":
-        if not _iceberg_available(df.sparkSession):
-            raise RuntimeError(
-                "WEBINDEX_TABLE_FORMAT=iceberg but the Iceberg runtime is not "
-                "on the classpath. Add iceberg-spark-runtime to spark.jars and "
-                "configure spark.sql.catalog.<name>=org.apache.iceberg.spark."
-                "SparkCatalog; dest must then be a catalog table name."
-            )
+        _require_iceberg(df.sparkSession)
         w = df.writeTo(dest).using("iceberg")
         if partition_by:
             from pyspark.sql import functions as F
@@ -104,50 +108,6 @@ def write_table(
     raise ValueError(f"unknown table format: {fmt}")
 
 
-def write_driver_table(
-    spark,
-    rows: list[tuple],
-    schema,
-    dest: str,
-    fmt: str | None = None,
-) -> None:
-    """Write a metadata-scale (few-row) table WITHOUT a Spark job.
-
-    The one-row sidecars (corpus_stats, conf) each cost a createDataFrame +
-    single-task write job through the normal path — measured ~0.5-1s of pure
-    fixed overhead apiece on local[32], charged to every build. For parquet
-    the driver writes the file directly with pyarrow (bit-identical types:
-    the arrow schema is derived from the Spark StructType, so
-    spark.read.parquet round-trips the exact same values and schema); the
-    iceberg seam keeps the normal catalog write, where the commit itself is
-    the metadata operation."""
-    fmt = fmt or table_format()
-    scheme_remote = "://" in dest and not dest.startswith("file://")
-    if fmt != "parquet" or scheme_remote:
-        # iceberg, or a non-local filesystem the driver can't write with
-        # pyarrow: keep the ordinary single-task write
-        write_table(spark.createDataFrame(rows, schema=schema), dest, fmt=fmt)
-        return
-    if dest.startswith("file://"):
-        dest = dest[len("file://"):]
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
-    cols = [
-        pa.array([r[i] for r in rows], type=arrow_schema.field(i).type)
-        for i in range(len(arrow_schema))
-    ]
-    table = pa.Table.from_arrays(cols, schema=arrow_schema)
-    if os.path.isdir(dest):
-        shutil.rmtree(dest)
-    os.makedirs(dest, exist_ok=True)
-    pq.write_table(table, os.path.join(dest, "part-00000.parquet"))
-
-
 def read_table(spark, dest: str, fmt: str | None = None) -> DataFrame:
     fmt = fmt or table_format()
     if fmt == "parquet":
@@ -155,6 +115,22 @@ def read_table(spark, dest: str, fmt: str | None = None) -> DataFrame:
     if fmt == "iceberg":
         return spark.read.table(dest)
     raise ValueError(f"unknown table format: {fmt}")
+
+
+def write_driver_table(
+    spark,
+    rows: list[tuple],
+    schema,
+    dest: str,
+    fmt: str | None = None,
+) -> None:
+    """Write (overwrite) a metadata-scale (few-row) table WITHOUT a Spark job.
+
+    The one-row sidecars (corpus_stats, conf) each cost a createDataFrame +
+    single-task write job through the normal path — measured ~0.5-1s of pure
+    fixed overhead apiece on local[32], charged to every build. See
+    _write_driver_rows for when the driver writes the file itself."""
+    _write_driver_rows(spark, rows, schema, dest, fmt, append=False)
 
 
 def append_driver_rows(
@@ -168,35 +144,78 @@ def append_driver_rows(
 
     The streaming sidecars (lineage, _epoch_map, compactions) append one row
     per micro-batch through createDataFrame + a single-task write job —
-    pure fixed job latency on the ingest path. For local parquet the driver
-    appends a uniquely-named file with pyarrow (same arrow-schema derivation
-    as write_driver_table, so spark.read.parquet sees one coherent table);
-    iceberg / remote filesystems keep the ordinary Spark append. The
-    single-writer workdir contract makes the non-transactional file add safe.
+    pure fixed job latency on the ingest path. A driver-side append adds one
+    uniquely-named file, so spark.read.parquet sees one coherent table. The
+    single-writer workdir contract makes the non-transactional file add
+    safe."""
+    _write_driver_rows(spark, rows, schema, dest, fmt, append=True)
+
+
+def _driver_local_path(spark, dest: str) -> str | None:
+    """dest as an absolute driver-local path when Hadoop resolves it to the
+    local filesystem, else None. Resolution is the same one every Spark read
+    and write of dest uses (fsutil.hadoop_fs): a scheme-less path goes
+    through fs.defaultFS, so on an HDFS/object-store deployment it is NOT
+    local even though it has no '://'."""
+    from webindex.fsutil import hadoop_fs
+
+    fs, jvm = hadoop_fs(spark, dest)
+    if fs.getUri().getScheme() != "file":
+        return None
+    return fs.makeQualified(jvm.org.apache.hadoop.fs.Path(dest)).toUri().getPath()
+
+
+def _write_driver_rows(
+    spark, rows: list[tuple], schema, dest: str, fmt: str | None, *, append: bool
+) -> None:
+    """The one driver-side writer behind write_driver_table and
+    append_driver_rows. For parquet on the driver's local filesystem the
+    driver writes the file with pyarrow (bit-identical types: the arrow
+    schema is derived from the Spark StructType, so spark.read.parquet
+    round-trips the exact same values and schema). Iceberg (where the commit
+    itself is the metadata operation) and any other filesystem keep the
+    ordinary single-task Spark write in the same format.
 
     `schema` may be a StructType or a DDL string ("a long, b string")."""
     fmt = fmt or table_format()
-    scheme_remote = "://" in dest and not dest.startswith("file://")
     if isinstance(schema, str):
         from pyspark.sql.types import _parse_datatype_string
 
         schema = _parse_datatype_string(schema)
-    if fmt != "parquet" or scheme_remote:
-        spark.createDataFrame(rows, schema=schema).write.mode("append").parquet(dest)
+    local = _driver_local_path(spark, dest) if fmt == "parquet" else None
+    if local is None:
+        df = spark.createDataFrame(rows, schema=schema)
+        if not append:
+            write_table(df, dest, fmt=fmt)
+        elif fmt == "parquet":
+            df.write.mode("append").parquet(dest)
+        elif fmt == "iceberg":
+            _require_iceberg(spark)
+            df.write.format("iceberg").mode("append").saveAsTable(dest)
+        else:
+            raise ValueError(f"unknown table format: {fmt}")
         return
-    if dest.startswith("file://"):
-        dest = dest[len("file://"):]
-    import uuid
-
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
-    cols = [
-        pa.array([r[i] for r in rows], type=arrow_schema.field(i).type)
-        for i in range(len(arrow_schema))
-    ]
-    table = pa.Table.from_arrays(cols, schema=arrow_schema)
-    os.makedirs(dest, exist_ok=True)
-    pq.write_table(table, os.path.join(dest, f"part-{uuid.uuid4().hex}.parquet"))
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    if append:
+        import uuid
+
+        name = f"part-{uuid.uuid4().hex}.parquet"
+    else:
+        import shutil
+
+        if os.path.isdir(local):
+            shutil.rmtree(local)
+        name = "part-00000.parquet"
+    os.makedirs(local, exist_ok=True)
+    pq.write_table(table, os.path.join(local, name))

@@ -52,15 +52,19 @@ from webindex.bm25 import BM25Config, DEFAULT
 from webindex.build import (
     DOC_MARKER,
     Index,
-    adaptive_range_width,
+    _vocab_prelude,
     assign_doc_ids,
     bucket_expr,
+    build_doc_stats,
     build_postings,
     build_runs,
     decode_postings_to_runs,
+    dict_file_target,
     hash_bucket_bits,
+    overlap_chains,
     term_stats_from_postings,
 )
+from webindex.io import write_driver_table, write_table
 
 
 from webindex.fsutil import hadoop_fs as _hadoop_fs, hadoop_delete as _hadoop_delete
@@ -525,8 +529,6 @@ class IncrementalIndexer:
         # arrow schema derived from the same StructType — bit-identical
         # round-trip, ~0.5-1s of fixed job latency saved per compact
         # (round 6, same as build_index's corpus_stats/conf sidecars)
-        from webindex.io import write_driver_table
-
         c = self.conf
         write_driver_table(
             self.spark,
@@ -556,22 +558,6 @@ class IncrementalIndexer:
         over the full runs volume."""
         latest = doc_urls.groupBy("doc_id").agg(F.max("batch_id").alias("batch_id"))
         return runs.join(latest, ["doc_id", "batch_id"]).drop("batch_id")
-
-    def _doc_stats_of(self, runs_latest: DataFrame, doc_urls_latest: DataFrame) -> DataFrame:
-        lens = runs_latest.filter(F.col("term") == DOC_MARKER).select("doc_id", "doc_len")
-        return doc_urls_latest.join(lens, "doc_id", "left").select(
-            "doc_id",
-            "url",
-            F.coalesce(F.col("doc_len"), F.lit(0)).cast("int").alias("doc_len"),
-        )
-
-    def _write_postings(self, postings: DataFrame) -> None:
-        (
-            postings.sortWithinPartitions("bucket", "term_hash", "block_id")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{self.workdir}/index/postings")
-        )
 
     def _load_index(
         self, n_docs: int, avgdl: float, range_width: int,
@@ -606,12 +592,15 @@ class IncrementalIndexer:
         # dictionaries): without it every incremental compact re-fragments
         # the dictionary into shuffle-partition-many overlapping-range files
         # and live queries pay per-file open cost on every stats probe
-        dict_files = max(1, n_docs // 2_000_000)
-        term_stats_from_postings(
-            spark.read.parquet(f"{out}/postings"), n_docs, term_dict
-        ).coalesce(dict_files).sortWithinPartitions("term").write.mode(
-            "overwrite"
-        ).parquet(staging)
+        write_table(
+            term_stats_from_postings(
+                spark.read.parquet(f"{out}/postings"), n_docs, term_dict
+            ),
+            staging,
+            sort_cols=["term"],
+            coalesce=dict_file_target(n_docs),
+            fmt="parquet",
+        )
         fs, jvm = _hadoop_fs(spark, out)
         Path = jvm.org.apache.hadoop.fs.Path
         final = Path(f"{out}/term_stats")
@@ -772,43 +761,27 @@ class IncrementalIndexer:
             )
             runs_latest = runs_latest.join(dead, "doc_id", "left_anti")
             doc_urls_latest = doc_urls_latest.join(dead, "doc_id", "left_anti")
-        doc_stats = self._doc_stats_of(runs_latest, doc_urls_latest)
-        from webindex.build import vocab_and_corpus_agg
-
-        # vocab + corpus stats in ONE pass over the merged runs (the
-        # DOC_MARKER group carries n_docs and the token total)
-        vocab_df, vocab_handle, n_docs, avgdl = vocab_and_corpus_agg(runs_latest)
-
-        range_width = self.range_width or adaptive_range_width(n_docs)
+        doc_stats = build_doc_stats(doc_urls_latest, runs_latest)
+        # the same prelude as build_index: vocab + corpus stats in ONE pass
+        # over the merged runs (the DOC_MARKER group carries n_docs and the
+        # token total), then pre-shuffle hash-collision resolution (a fresh
+        # full compact may re-key; only the incremental path must preserve
+        # committed keys)
+        term_stats, vocab_handle, n_docs, avgdl, range_width, remap = (
+            _vocab_prelude(runs_latest, self.range_width, self.hash_primary_fn)
+        )
         bits = hash_bucket_bits(n_docs, range_width)
         out = f"{self.workdir}/index"
         # full re-shard may change the bucket layout: clear old dirs so no
         # stale partitions survive the dynamic overwrite
         _hadoop_delete(spark, f"{out}/postings")
         _hadoop_delete(spark, f"{out}/doc_stats")
-        # full compact mirrors the batch build: df + dictionary + corpus
-        # stats in ONE map-side-combined pass (vocab_and_corpus_agg above),
-        # with pre-shuffle hash-collision resolution (a fresh full compact
-        # may re-key; only the incremental path must preserve committed keys)
-        from webindex.build import _with_idf, resolve_term_hashes, term_hash_expr
-
-        _, remap = resolve_term_hashes(vocab_df, primary_fn=self.hash_primary_fn)
-        # round-6 tail, same as build.build_index / checkpoint (guide §2.6):
-        # the three table writes are independent chains — overlap them so a
-        # chain's task tail back-fills the others. The dictionary coalesces
-        # to a data-derived file target (guide §6 small-files: live_index's
-        # per-query dictionary probe pays per-file open cost); the post-write
-        # assert_no_hash_collisions re-scan is dropped because
-        # resolve_term_hashes above already raised on any unresolved clash
-        # BEFORE the shuffle (same proof as build_index, round 6).
-        from concurrent.futures import ThreadPoolExecutor
-
-        from webindex.io import write_driver_table
-
-        dict_files = max(1, n_docs // 2_000_000)
+        # the three table writes are independent chains, overlapped like
+        # build_index's; unlike it, postings and doc_stats are partitioned
+        # BY bucket — the layout the incremental per-bucket swap relies on
 
         def _w_postings() -> None:
-            self._write_postings(
+            write_table(
                 build_postings(
                     runs_latest,
                     avgdl,
@@ -819,40 +792,38 @@ class IncrementalIndexer:
                     bucket_bits=bits,
                     hash_remap=remap,
                     hash_primary_fn=self.hash_primary_fn,
-                )
+                ),
+                f"{out}/postings",
+                sort_cols=["bucket", "term_hash", "block_id"],
+                partition_by="bucket",
+                fmt="parquet",
             )
 
         def _w_terms() -> None:
-            _with_idf(
-                vocab_df.withColumn(
-                    "term_hash",
-                    term_hash_expr(F.col("term"), remap, self.hash_primary_fn),
-                ),
-                n_docs,
-            ).coalesce(dict_files).sortWithinPartitions("term").write.mode(
-                "overwrite"
-            ).parquet(f"{out}/term_stats")
+            write_table(
+                term_stats, f"{out}/term_stats", sort_cols=["term"],
+                coalesce=dict_file_target(n_docs), fmt="parquet",
+            )
 
         def _w_docs() -> None:
-            doc_stats.withColumn(
-                "bucket",
-                bucket_expr(F.col("doc_id"), n_docs, range_width, "hash", bits),
-            ).sortWithinPartitions("doc_id").write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(f"{out}/doc_stats")
+            write_table(
+                doc_stats.withColumn(
+                    "bucket",
+                    bucket_expr(F.col("doc_id"), n_docs, range_width, "hash", bits),
+                ),
+                f"{out}/doc_stats",
+                sort_cols=["doc_id"],
+                partition_by="bucket",
+                fmt="parquet",
+            )
 
+        overlap_chains(_w_postings, _w_terms, _w_docs)
+        vocab_handle.unpersist()
+        # corpus_stats only once the tables it describes are committed
         write_driver_table(
             spark, [(n_docs, avgdl, -1)], schema.CORPUS_STATS,
             f"{out}/corpus_stats", fmt="parquet",
         )
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for fut in [
-                pool.submit(_w_postings),
-                pool.submit(_w_terms),
-                pool.submit(_w_docs),
-            ]:
-                fut.result()
-        vocab_handle.unpersist()
         self._write_state(max(done) if done else -1, bits, range_width, n_docs, n_docs * avgdl)
         # a full compact rebuilds every table and stat from the runs history,
         # so it clears any interrupted-incremental fence (the recovery route
@@ -1024,33 +995,38 @@ class IncrementalIndexer:
         )
 
         def _stage_postings() -> None:
-            build_postings(
-                merged,
-                avgdl,
-                self.conf,
-                range_width,
-                n_docs=n_docs,
-                id_space="hash",
-                bucket_bits=bits,
-            ).sortWithinPartitions("bucket", "term_hash", "block_id").write.mode(
-                "overwrite"
-            ).partitionBy("bucket").parquet(staging)
+            write_table(
+                build_postings(
+                    merged,
+                    avgdl,
+                    self.conf,
+                    range_width,
+                    n_docs=n_docs,
+                    id_space="hash",
+                    bucket_bits=bits,
+                ),
+                staging,
+                sort_cols=["bucket", "term_hash", "block_id"],
+                partition_by="bucket",
+                fmt="parquet",
+            )
 
         def _stage_doc_stats() -> None:
-            kept_old.unionByName(delta_stats).withColumn(
-                "bucket", bcol
-            ).sortWithinPartitions("doc_id").write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(ds_staging)
+            write_table(
+                kept_old.unionByName(delta_stats).withColumn("bucket", bcol),
+                ds_staging,
+                sort_cols=["doc_id"],
+                partition_by="bucket",
+                fmt="parquet",
+            )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [
-                pool.submit(_stage_postings),
-                pool.submit(_stage_doc_stats),
-            ]:
-                fut.result()
+        # clear both staging dirs first: under the session's dynamic
+        # partitionOverwriteMode an overwrite keeps bucket dirs this run does
+        # not write, so a crashed attempt's leftovers would otherwise be
+        # swapped in below (ghost doc_stats rows, stale blocks)
+        _hadoop_delete(spark, staging)
+        _hadoop_delete(spark, ds_staging)
+        overlap_chains(_stage_postings, _stage_doc_stats)
         old_rows.unpersist()
         # commit fence: from the first table swap to the state write the
         # committed tables and the state counts can disagree; a crash inside
@@ -1078,8 +1054,6 @@ class IncrementalIndexer:
         # term_dict was resolved pre-merge (existing keys preserved, delta
         # collisions remapped) — unique over the union by construction
         self._finish_tables(n_docs, term_dict)
-        from webindex.io import write_driver_table
-
         write_driver_table(
             spark, [(n_docs, avgdl, -1)], schema.CORPUS_STATS,
             f"{out}/corpus_stats", fmt="parquet",
