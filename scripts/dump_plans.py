@@ -1,4 +1,14 @@
-"""Dump annotated physical plans of the engine's key paths -> PLANS.md.
+"""Dump the physical plans (explain("formatted")) of the engine's key paths.
+
+    python scripts/dump_plans.py
+        annotated hot-path plans -> PLANS.md
+    python scripts/dump_plans.py --out plans/r07 --tag after
+        one <name>_<tag>.txt per path into --out: the build encode stage,
+        the term dictionary lookup, LSH candidate pairs and the BM25 query
+        families (wand, match operator=and, bool, batch, fuzzy, synonyms)
+
+The --out form calls only the public API, so a copy of this script run in
+an older checkout writes the matching `before` set for a plan diff.
 
 Evidence that the plans are the ones we want: column pruning reaches the
 scan, term filters are pushed to parquet, whole-stage codegen spans the
@@ -7,7 +17,9 @@ relational stages, and the only Python boundaries are the Arrow UDFs.
 
 from __future__ import annotations
 
+import argparse
 import io
+import shutil
 import sys
 import tempfile
 from contextlib import redirect_stdout
@@ -24,7 +36,99 @@ def grab(df) -> str:
     return buf.getvalue().strip()
 
 
+def dump_paths(out: Path, tag: str) -> None:
+    """Write <name>_<tag>.txt into `out` for every path below."""
+    from pyspark.sql import functions as F
+
+    from webindex.bm25 import DEFAULT
+    from webindex.build import (
+        adaptive_range_width,
+        assign_doc_ids,
+        build_index,
+        build_postings,
+        build_runs,
+        vocab_and_corpus_agg,
+    )
+    from webindex.dedup import lsh_candidate_pairs, minhash_signatures
+    from webindex.pagesgen import generate_pages_df
+    from webindex.query import (
+        topk_batch,
+        topk_bool,
+        topk_fuzzy,
+        topk_match,
+        topk_synonyms,
+        topk_wand,
+    )
+    from webindex.session import get_spark
+
+    out.mkdir(parents=True, exist_ok=True)
+    spark = get_spark(app="plans", master="local[4]")
+    wd = tempfile.mkdtemp(prefix="plans_")
+    generate_pages_df(spark, 5000).write.mode("overwrite").parquet(f"{wd}/pages")
+    pages = assign_doc_ids(spark.read.parquet(f"{wd}/pages"), "hash")
+
+    def dump(name: str, df) -> None:
+        (out / f"{name}_{tag}.txt").write_text(grab(df) + "\n")
+        print("wrote", name, tag)
+
+    # posting-block encode plan (the build's dominant stage)
+    runs = build_runs(pages, text_col="html")
+    runs.write.mode("overwrite").parquet(f"{wd}/runs")
+    runs_d = spark.read.parquet(f"{wd}/runs")
+    _, vh, n_docs, avgdl = vocab_and_corpus_agg(runs_d)
+    dump(
+        "build_postings",
+        build_postings(
+            runs_d, avgdl, DEFAULT, adaptive_range_width(n_docs),
+            n_docs=n_docs, id_space="hash",
+        ),
+    )
+    vh.unpersist()
+
+    idx = build_index(
+        spark, pages, text_col="html", doc_id_method="hash", out_dir=f"{wd}/idx"
+    )
+    dump("term_lookup", idx.term_stats.filter(F.col("term").isin(["the", "data"])))
+    dump("topk_wand", topk_wand(idx, "the data merge", 10))
+    dump("topk_match_and", topk_match(idx, "the data merge", 10, operator="and"))
+    dump(
+        "topk_bool",
+        topk_bool(idx, must="data", should="merge index", must_not="spark", k=10),
+    )
+    dump(
+        "topk_batch",
+        topk_batch(idx, {"q0": "the data merge", "q1": "index spark", "q2": "w150"}, 10),
+    )
+    dump("topk_fuzzy", topk_fuzzy(idx, "dara", 10))
+    dump(
+        "topk_synonyms",
+        topk_synonyms(idx, "search data", {"search": ["query", "index"]}, 10),
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"common tokens here doc {i % 7} tail {i}") for i in range(200)],
+        "doc_id long, text string",
+    )
+    dump(
+        "lsh_pairs",
+        lsh_candidate_pairs(minhash_signatures(docs, n_hashes=16), n_bands=4),
+    )
+    shutil.rmtree(wd, ignore_errors=True)
+    spark.stop()
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", type=Path, help="directory for <name>_<tag>.txt plans")
+    ap.add_argument("--tag", default="after", help="file-name tag, e.g. before|after")
+    args = ap.parse_args()
+    if args.out is not None:
+        dump_paths(args.out, args.tag)
+        return
+    write_plans_md()
+
+
+def write_plans_md() -> None:
     from pyspark.sql import functions as F
 
     from webindex.build import assign_doc_ids, build_index, build_runs

@@ -411,9 +411,9 @@ def test_function_score_pruned_identical_and_prunes(spark):
     import pandas as pd
 
     from webindex.query import (
-        _maps_of,
+        _bm25_match_bucket,
         _query_terms,
-        _score_bucket_fn,
+        _terms_spec,
         topk_wand,
     )
 
@@ -453,7 +453,6 @@ def test_function_score_pruned_identical_and_prunes(spark):
 
     # decode-count check at the bucket level with the θ the pruned path uses
     stats = _query_terms(idx, "aa")
-    idf_map, term_rank = _maps_of(stats)
     seed = sorted(
         (
             (r["score"] * np.log1p(float(boost[r["doc_id"]])), r["doc_id"])
@@ -466,15 +465,15 @@ def test_function_score_pruned_identical_and_prunes(spark):
     theta_bm25 = float(np.nextafter(theta_fs / big_m, 0.0))
     assert theta_bm25 > 0.0
     rows = idx.postings.filter(
-        F.col("term_hash").isin(list(idf_map))
+        F.col("term_hash").isin([h for (_, _, h) in stats.values()])
     ).toPandas()
     probe = {}
-    fn = _score_bucket_fn(
-        idf_map, term_rank, idx.conf, idx.avgdl, None, theta_bm25,
-        _probe=probe,
-    )
+    spec = _terms_spec(stats, theta=theta_bm25)
     for _, grp in rows.groupby("bucket"):
-        fn(grp.reset_index(drop=True))
+        _bm25_match_bucket(
+            grp.reset_index(drop=True), [spec], idx.conf, idx.avgdl, None,
+            _probe=probe,
+        )
     assert probe["blocks_total"] > probe.get("blocks_decoded", 0), probe
 
 
@@ -527,9 +526,9 @@ def test_function_score_per_bucket_extrema_prunes_skewed(spark):
     import pandas as pd
 
     from webindex.query import (
-        _maps_of,
+        _bm25_match_bucket,
         _query_terms,
-        _score_bucket_fn,
+        _terms_spec,
         field_extrema,
         topk_function_score,
         topk_wand,
@@ -569,7 +568,6 @@ def test_function_score_per_bucket_extrema_prunes_skewed(spark):
     # decode-count comparison, global θ vs per-bucket θ_b, through the same
     # bucket scorer the production path uses (probe runs driver-side)
     stats = _query_terms(idx, "aa")
-    idf_map, term_rank = _maps_of(stats)
     seed = sorted(
         (
             (r["score"] * math.log1p(float(boost[r["doc_id"]])), r["doc_id"])
@@ -582,21 +580,21 @@ def test_function_score_per_bucket_extrema_prunes_skewed(spark):
         int(r["bucket"]): float(r["mx"])
         for r in field_extrema(idx, stored, "pop").collect()
     }
-    rows = idx.postings.filter(F.col("term_hash").isin(list(idf_map))).toPandas()
+    hashes = [h for (_, _, h) in stats.values()]
+    rows = idx.postings.filter(F.col("term_hash").isin(hashes)).toPandas()
 
     def decoded(theta_global: float, per_bucket: bool) -> int:
         probe = {}
-        fn = _score_bucket_fn(
-            idf_map, term_rank, idx.conf, idx.avgdl, None, theta_global,
-            _probe=probe,
-        )
+        spec = _terms_spec(stats, theta=theta_global)
         for b, grp in rows.groupby("bucket"):
             grp = grp.reset_index(drop=True)
             if per_bucket:
                 mb = math.log1p(ext[int(b)])
                 tb = (theta_fs / mb) * (1 - 1e-15) if mb > 0 else float("inf")
                 grp = grp.assign(_theta_b=tb)
-            fn(grp)
+            _bm25_match_bucket(
+                grp, [spec], idx.conf, idx.avgdl, None, _probe=probe
+            )
         return probe.get("blocks_decoded", 0)
 
     big_m = math.log1p(float(max(boost.values())))

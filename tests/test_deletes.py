@@ -309,6 +309,71 @@ def test_live_index_bool_pinned_exclude_deleted(spark, tmp_path):
     assert top_doc not in pinned
 
 
+@pytest.fixture(scope="module")
+def live_data(spark, tmp_path_factory):
+    """A 60-page ingest index, and its live_index() with the top "data"
+    doc tombstoned but not yet compacted."""
+    pdf = make_pages_pdf(0, 60)
+    ing = IncrementalIndexer(
+        spark, str(tmp_path_factory.mktemp("live") / "wd"), text_col="text"
+    )
+    idx0 = ing.upsert(spark.createDataFrame(pdf))
+    top_doc = topk(idx0, "data", 1).collect()[0]["doc_id"]
+    url = idx0.doc_stats.filter(F.col("doc_id") == top_doc).collect()[0]["url"]
+    ing.delete([url], compact_now=False)
+    return idx0, ing.live_index(), top_doc
+
+
+def _batch_rows(df):
+    return [
+        (r["query_id"], r["doc_id"], round(r["score"], 9))
+        for r in df.orderBy("query_id", "rank").collect()
+    ]
+
+
+@pytest.mark.parametrize(
+    "family", ["fuzzy", "synonyms", "simple_query_string", "batch", "batch_pruned"]
+)
+def test_live_index_every_bm25_family_excludes_deleted(live_data, family):
+    """Pending deletes reach every BM25-scored family, not just WAND/bool:
+    each returns exactly its pre-delete k+1 rows minus the dead doc."""
+    from webindex.query import (
+        simple_query_string,
+        topk_batch,
+        topk_fuzzy,
+        topk_synonyms,
+    )
+
+    idx0, live, dead = live_data
+    k = 10
+    if family.startswith("batch"):
+        queries = {"q0": "data", "q1": "the data merge"}
+        kw = (
+            {"prune": True, "seed_min_blocks": 0}
+            if family == "batch_pruned"
+            else {"prune": False}
+        )
+        before = _batch_rows(topk_batch(idx0, queries, k + 1, **kw))
+        got = _batch_rows(topk_batch(live, queries, k, **kw))
+        assert any(d == dead for _, d, _ in before)
+        want = [
+            row
+            for qid in sorted(queries)
+            for row in [r for r in before if r[0] == qid and r[1] != dead][:k]
+        ]
+        assert got == want
+        return
+    run = {
+        "fuzzy": lambda ix, n: topk_fuzzy(ix, "data", n),
+        "synonyms": lambda ix, n: topk_synonyms(ix, "data", {"data": ["merge"]}, n),
+        "simple_query_string": lambda ix, n: simple_query_string(ix, "data", k=n),
+    }[family]
+    before = [(r["doc_id"], round(r["score"], 9)) for r in run(idx0, k + 1).collect()]
+    got = [(r["doc_id"], round(r["score"], 9)) for r in run(live, k).collect()]
+    assert any(d == dead for d, _ in before)
+    assert got == [(d, s) for d, s in before if d != dead][:k]
+
+
 def test_delete_on_fresh_workdir_is_recorded_noop(spark, tmp_path):
     """delete()/delete_by_query() before any ingest: the documented
     recorded no-op — no crash compacting a corpus that does not exist, and

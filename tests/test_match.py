@@ -4,8 +4,8 @@ coverage prune exercised directly at the block-metadata level.
 
 The reference's mapping-less ES index serves the whole `match` family
 (reference: src/nmr_FAIR_DOs/connectors/elasticsearch.py:169-173, :250-262);
-these modes share the WAND kernel — scoring identical, plus a distinct-term
-count constraint."""
+these modes share the one BM25 bucket kernel with WAND — scoring identical,
+plus a distinct-term count constraint."""
 
 import numpy as np
 import pandas as pd
@@ -16,10 +16,11 @@ from webindex.build import build_index
 from webindex.oracle import OracleIndex
 from webindex.pagesgen import make_pages_pdf
 from webindex.query import (
+    _bm25_match_bucket,
+    _hits_fn,
     _interval_prune,
-    _maps_of,
     _query_terms,
-    _score_bucket_fn,
+    _terms_spec,
     topk_match,
     topk_wand,
 )
@@ -131,13 +132,15 @@ def test_and_bucket_kernel_prunes_decode(idx):
     stats = _query_terms(idx, query)
     if len(stats) < 2:
         pytest.skip("fixture lacks both tail terms")
-    idf_map, term_rank = _maps_of(stats)
-    rows = idx.postings.filter(F.col("term_hash").isin(list(idf_map))).toPandas()
-    and_fn = _score_bucket_fn(
-        idf_map, term_rank, idx.conf, idx.avgdl, k=100, theta=0.0, msm=2
+    hashes = [h for (_, _, h) in stats.values()]
+    rows = idx.postings.filter(F.col("term_hash").isin(hashes)).toPandas()
+    and_fn = _hits_fn(
+        _bm25_match_bucket, _terms_spec(stats, msm=2),
+        conf=idx.conf, avgdl=idx.avgdl, k=100,
     )
-    or_fn = _score_bucket_fn(
-        idf_map, term_rank, idx.conf, idx.avgdl, k=100, theta=0.0, msm=1
+    or_fn = _hits_fn(
+        _bm25_match_bucket, _terms_spec(stats, msm=1),
+        conf=idx.conf, avgdl=idx.avgdl, k=100,
     )
     and_hits = pd.concat(
         [and_fn(g.reset_index(drop=True)) for _, g in rows.groupby("bucket")]
@@ -151,3 +154,26 @@ def test_and_bucket_kernel_prunes_decode(idx):
     assert np.array_equal(
         merged["score_and"].to_numpy(), merged["score_or"].to_numpy()
     )
+
+
+@pytest.mark.parametrize(
+    "shape", ["bool_should_msm2", "bool_should_msm3", "fuzzy_zero_edits", "synonyms_none"]
+)
+def test_degenerate_shapes_equal_their_match_twins(idx, shape):
+    """Query shapes that compile to the same BM25 kernel spec branches must
+    agree with their plain twins: bool should+msm (the sum branch plus the
+    msm prune), fuzzy at 0 edits (the max branch over one clause), synonyms
+    with no synonyms (the pooling branch over singleton groups)."""
+    from webindex.query import topk_bool, topk_fuzzy, topk_synonyms
+
+    q = "data merge w150"
+    if shape.startswith("bool_should_msm"):
+        m = int(shape[-1])
+        got = topk_bool(idx, should=q, minimum_should_match=m)
+        want = topk_match(idx, q, minimum_should_match=m)
+    elif shape == "fuzzy_zero_edits":
+        got, want = topk_fuzzy(idx, "data", fuzziness=0), topk_wand(idx, "data")
+    else:
+        got, want = topk_synonyms(idx, q, {}), topk_wand(idx, q)
+    assert _rows(want)
+    assert _rows(got) == _rows(want)

@@ -211,7 +211,7 @@ def test_phrase_block_prune_skips_disjoint_ranges(spark):
     contain the rare anchor term are never decoded; results identical."""
     import pandas as pd
 
-    from webindex.query import _phrase_bucket_fn, _query_terms
+    from webindex.query import _hits_fn, _phrase_match_bucket, _query_terms
 
     texts = {}
     for i in range(64):
@@ -234,7 +234,10 @@ def test_phrase_block_prune_skips_disjoint_ranges(spark):
     assert rows["bucket"].nunique() == 1  # single bucket: prune is in-bucket
 
     probe = {}
-    fn = _phrase_bucket_fn(hashes, sum_idf, idx.conf, idx.avgdl, 10, _probe=probe)
+    fn = _hits_fn(
+        _phrase_match_bucket, ("q", hashes, sum_idf, 0),
+        conf=idx.conf, avgdl=idx.avgdl, k=10, _probe=probe,
+    )
     local = fn(rows)
     # 'the' alone has 16 blocks; only those overlapping docs 0-3 survive
     assert probe["blocks_total"] >= 17
@@ -367,7 +370,7 @@ def test_phrase_impact_prune_hot_hot(spark):
     results stay byte-identical to the oracle."""
     import pandas as pd
 
-    from webindex.query import _phrase_bucket_fn, _query_terms
+    from webindex.query import _hits_fn, _phrase_match_bucket, _query_terms
 
     texts = {}
     for i in range(64):
@@ -393,7 +396,10 @@ def test_phrase_impact_prune_hot_hot(spark):
     assert rows["bucket"].nunique() == 1
 
     probe = {}
-    fn = _phrase_bucket_fn(hashes, sum_idf, idx.conf, idx.avgdl, 5, _probe=probe)
+    fn = _hits_fn(
+        _phrase_match_bucket, ("q", hashes, sum_idf, 0),
+        conf=idx.conf, avgdl=idx.avgdl, k=5, _probe=probe,
+    )
     local = fn(rows)
     # both terms cover every doc (16 blocks each at block_size=4): without
     # the impact prune all 32 would decode; the high-impact intervals

@@ -1,7 +1,8 @@
 """Interval-level block-max pruning engages and stays exact.
 
-Drives webindex.query._score_bucket_fn directly on real block rows so the
-pruning branch (theta>0) is observably exercised (not just equal-output)."""
+Drives the BM25 bucket kernel (webindex.query._bm25_match_bucket) directly
+on real block rows so the pruning branch (theta>0) is observably exercised
+(not just equal-output)."""
 
 import numpy as np
 import pandas as pd
@@ -10,7 +11,14 @@ from pyspark.sql import functions as F
 
 from webindex.build import build_index
 from webindex.pagesgen import make_pages_pdf
-from webindex.query import _query_terms, _score_bucket_fn, topk_exact, topk_wand
+from webindex.query import (
+    _bm25_match_bucket,
+    _hits_fn,
+    _query_terms,
+    _terms_spec,
+    topk_exact,
+    topk_wand,
+)
 
 
 @pytest.fixture(scope="module")
@@ -28,30 +36,31 @@ def _bucket_frames(idx, hashes):
     return {b: g.reset_index(drop=True) for b, g in rows.groupby("bucket")}
 
 
-def test_prune_all_when_theta_unreachable(idx):
-    from webindex.query import _maps_of
+def _kernel_fn(idx, stats, k, theta):
+    return _hits_fn(
+        _bm25_match_bucket, _terms_spec(stats, theta=theta),
+        conf=idx.conf, avgdl=idx.avgdl, k=k,
+    )
 
+
+def test_prune_all_when_theta_unreachable(idx):
     stats = _query_terms(idx, "the data")
-    idf_map, term_rank = _maps_of(stats)
-    fn = _score_bucket_fn(idf_map, term_rank, idx.conf, idx.avgdl, k=10, theta=1e9)
-    for pdf in _bucket_frames(idx, list(idf_map)).values():
+    fn = _kernel_fn(idx, stats, k=10, theta=1e9)
+    for pdf in _bucket_frames(idx, [h for (_, _, h) in stats.values()]).values():
         assert len(fn(pdf)) == 0  # every interval UB < theta -> all pruned
 
 
 def test_partial_prune_keeps_survivors_exact(idx):
-    from webindex.query import _maps_of
-
     # rare + hot mix: intervals without the rare term have UB = hot-only,
     # far below a theta anchored at the rare docs' scores -> real pruning
     query = "w199 the"
     stats = _query_terms(idx, query)
     assert "w199" in stats, "fixture corpus must contain the rare tail term"
-    idf_map, term_rank = _maps_of(stats)
-    frames = _bucket_frames(idx, list(idf_map))
-    exact_fn = _score_bucket_fn(idf_map, term_rank, idx.conf, idx.avgdl, k=1000, theta=0.0)
+    frames = _bucket_frames(idx, [h for (_, _, h) in stats.values()])
+    exact_fn = _kernel_fn(idx, stats, k=1000, theta=0.0)
     all_scores = pd.concat([exact_fn(p) for p in frames.values()])
     theta = float(all_scores["score"].max()) * 0.5
-    pruned_fn = _score_bucket_fn(idf_map, term_rank, idx.conf, idx.avgdl, k=1000, theta=theta)
+    pruned_fn = _kernel_fn(idx, stats, k=1000, theta=theta)
     pruned = pd.concat([pruned_fn(p) for p in frames.values()])
     # every >=theta doc survives with a bit-identical score...
     keep = all_scores[all_scores["score"] >= theta].sort_values("doc_id")
@@ -69,7 +78,7 @@ def test_theta_seed_is_exact_and_bounded(spark):
     and (b) decode a strict subset of a hot term's blocks. Fine bucketing
     (range_width=8 -> ~32 blocks for a df~N term) so the doubling loop has
     room to stop early."""
-    from webindex.query import _decode_contribs_iter, _theta_seed
+    from webindex.query import _theta_seed
 
     pdf = make_pages_pdf(0, 256)
     pdf.insert(0, "doc_id", np.arange(256, dtype=np.int64))
@@ -81,17 +90,9 @@ def test_theta_seed_is_exact_and_bounded(spark):
     stats = _query_terms(idx, "the")
     df, idf, h = stats["the"]
     assert df > k
-    # exhaustive ground truth: decode EVERY block of the term
-    all_contribs = (
-        idx.postings.filter(F.col("term_hash") == h)
-        .mapInPandas(
-            _decode_contribs_iter({h: idf}, idx.conf, idx.avgdl),
-            schema="term_hash long, doc_id long, contrib double",
-        )
-        .toPandas()["contrib"]
-        .sort_values(ascending=False)
-    )
-    exact_kth = float(all_contribs.iloc[k - 1])
+    # exhaustive ground truth: a single-term query's score IS the term's
+    # contribution, so the exhaustive top-k's k-th score is the exact value
+    exact_kth = float(topk_exact(idx, "the", k).collect()[k - 1]["score"])
     probe = {}
     got = _theta_seed(idx, h, idf, k, _probe=probe)
     assert got == exact_kth

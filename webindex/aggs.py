@@ -443,11 +443,13 @@ def match_scores(
     value (term string -> idf) — the hook cross_fields uses to score every
     field with the BLENDED idf while keeping each field's own tf/dl/avgdl.
 
-    Same fused one-Exchange plan as the topk family (PLANS.md §7): pruned
-    IN(term_hash) block scan, one bucket groupBy, per-bucket decode+score.
-    The only difference is k=None — the local cut is skipped, so the output
-    is match-set-sized (bounded by the query terms' df sum), not k."""
-    from webindex.query import _maps_of, _query_terms, _score_bucket_fn, _HIT
+    Same fused one-Exchange plan and the same BM25 bucket kernel as the
+    topk family (PLANS.md §7): pruned IN(term_hash) block scan, one bucket
+    groupBy, per-bucket decode+score, pending deletes (Index.dead_ids)
+    dropped. The only difference is k=None — the local cut is skipped, so
+    the output is match-set-sized (bounded by the query terms' df sum), not
+    k."""
+    from webindex.query import _HIT, _bm25_hits, _terms_spec
 
     spark = index.postings.sparkSession
     stats = _query_terms(index, query)
@@ -458,12 +460,7 @@ def match_scores(
             t: (df, idf_override.get(t, idf), h)
             for t, (df, idf, h) in stats.items()
         }
-    idf_map, term_rank = _maps_of(stats)
-    blocks = index.postings.filter(F.col("term_hash").isin(list(idf_map)))
-    return blocks.groupBy("bucket").applyInPandas(
-        _score_bucket_fn(idf_map, term_rank, index.conf, index.avgdl, None, 0.0, msm),
-        schema=_HIT,
-    )
+    return _bm25_hits(index, _terms_spec(stats, msm=msm), None)
 
 
 def stats_agg(

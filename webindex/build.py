@@ -140,12 +140,18 @@ class Index:
     id_space: str | None = None
     bucket_bits: int | None = None
     # live-docs filter (round 5): doc_ids tombstoned since the last compact,
-    # applied by the fused BM25 scorer BEFORE its local top-k cut — the ES
-    # refresh-interval delete semantics (results exclude dead docs; n_docs/
-    # avgdl/df stay as-built until the merge, exactly Lucene's live-docs
-    # bitmap). Sorted int64 numpy array, driver-scale by construction: it
-    # holds only the deletes SINCE the last compact (streaming.live_index),
-    # the analogue of Lucene's per-segment deleted-docs bitmap in heap.
+    # applied by the BM25 bucket kernel (query._bm25_match_bucket) BEFORE
+    # its local top-k cut and by the θ-seed decodes — the ES refresh-interval
+    # delete semantics (results exclude dead docs; n_docs/avgdl/df stay
+    # as-built until the merge, exactly Lucene's live-docs bitmap). Honoured
+    # by every BM25-scored family: topk/exact/wand/match/after, bool (also
+    # its must_not-only match_all), function_score, fuzzy, synonyms,
+    # topk_batch, aggs.match_scores and what composes them, plus pinned.
+    # Phrase queries, term-level queries (prefix/wildcard/regexp, span,
+    # intervals) and the ids-only aggs still see deletes only at compact().
+    # Sorted int64 numpy array, driver-scale by construction: it holds only
+    # the deletes SINCE the last compact (streaming.live_index), the
+    # analogue of Lucene's per-segment deleted-docs bitmap in heap.
     dead_ids: "np.ndarray | None" = None
 
     def bucket_of(self, doc_id_col: F.Column) -> F.Column:

@@ -1,4 +1,4 @@
-"""Top-k BM25 query path: exhaustive scoring + distributed block-max WAND.
+"""Top-k BM25 query path: one bucket kernel for every term-scored query.
 
 Generalizes the reference's query lifecycle (reference:
 src/nmr_FAIR_DOs/connectors/elasticsearch.py:250-306 — multi_match query,
@@ -8,18 +8,43 @@ BM25-ranked hits, top-1 read) to arbitrary k over our native index:
       -> term_stats lookup (df+idf+term_hash per query term; one tiny job —
          term_stats is also the term dictionary, so query strings are mapped
          to the 8-byte hash keys the postings table is clustered by)
+      -> compile a scoring spec (driver-side, metadata-scale)
       -> candidate posting blocks (filter term_hash IN (...) — file/row-group
          pruning on the hash-clustered postings table)
-      -> groupBy(bucket) applyInPandas  [ONE fused stage]:
-           block-max WAND prune: skip the whole bucket when
-             UB(bucket) = Σ_t idf_t·max(max_impact) < θ
-           decode surviving blocks (numpy varint) -> BM25 contributions
-           per-doc sum in TERM-ASCENDING order (deterministic float64)
-           local top-k
+      -> groupBy(bucket) applyInPandas  [ONE fused stage: _bm25_match_bucket]
       -> global orderBy(score desc, doc_id asc).limit(k)  [k rows per bucket]
+         (a per-query Window rank for topk_batch)
+
+Every BM25-scored family — topk_exact/wand/match/after, topk_bool,
+topk_function_score, topk_fuzzy, topk_synonyms, topk_batch and
+aggs.match_scores (hence everything composed from it) — only compiles its
+query into a _Spec and runs the ONE kernel, the way Elasticsearch runs
+match, bool, dis_max, synonym and fuzzy queries through one Lucene scorer
+tree. A single query is a batch of one. A spec is an ordered list of
+clauses plus msm, θ, an optional search_after cursor and a combine mode:
+
+  clause   (member term hashes, idf, required, scored, excluded, should).
+           Clause order is the float64 summation order (term-string
+           ascending for match; query-token ascending for synonym groups).
+           A clause with several members pools tf per doc before the
+           impact is computed (Lucene SynonymQuery) — the only pooling.
+  msm      >= msm should clauses must match; every required clause must
+           match (n_required = the required clauses); a matching excluded
+           clause drops the doc.
+  θ        block-max WAND threshold; a per-bucket `_theta_b` column
+           (function_score's skew bound) raises it per bucket.
+  combine  "sum" (BooleanQuery), or "max" (fuzzy's dis_max).
+
+Per bucket the kernel runs, in order: one metadata prune (_interval_prune:
+θ-UB with θ raised to the bucket's `_theta_b`, required coverage and
+should-msm over elementary doc-range intervals; skipped when none can
+bite), one batched decode of every block any spec still needs
+(_decode_impacts, shared with the θ-seed jobs), the live-docs filter
+(Index.dead_ids), the per-doc reduce, the search_after cursor, and the
+local top-k (no cut when k is None).
 
 Buckets partition doc space (build.bucket_expr), so each doc's postings for
-ALL query terms land in the same bucket group — the per-bucket sum is the
+ALL query terms land in the same bucket group — the per-bucket reduce is the
 full score, local top-k is safe, and pruning a bucket can never corrupt a
 surviving doc's score. θ is seeded from the rarest query term: its k-th
 largest single-term contribution lower-bounds the final k-th best score
@@ -33,6 +58,8 @@ are identical at any parallelism and equal to the pytest oracle's.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -57,6 +84,41 @@ _DECODED = T.StructType(
     ]
 )
 
+# batch results: the kernels' per-bucket local hits, and the ranked output
+_BATCH_LOCAL = T.StructType(
+    [T.StructField("query_id", T.StringType(), False), *_HIT.fields]
+)
+_BATCH_HIT = T.StructType(
+    [*_BATCH_LOCAL.fields, T.StructField("rank", T.IntegerType(), False)]
+)
+
+# a bucket that yields nothing still returns typed columns
+_EMPTY_HITS = pd.DataFrame(
+    {"doc_id": np.empty(0, dtype=np.int64), "score": np.empty(0, dtype=np.float64)}
+)
+
+
+class _Clause(NamedTuple):
+    """One clause of a _Spec (see the module docstring)."""
+
+    hashes: tuple[int, ...]
+    idf: float
+    required: bool = False
+    scored: bool = True
+    excluded: bool = False
+    should: bool = True
+
+
+class _Spec(NamedTuple):
+    """One query as the BM25 kernel runs it (see the module docstring)."""
+
+    qid: str
+    clauses: list[_Clause]
+    msm: int = 1
+    theta: float = 0.0
+    after: tuple[float, int] | None = None
+    combine: str = "sum"
+
 
 def _query_terms(index: Index, query: str) -> dict[str, tuple[int, float, int]]:
     """{term: (df, idf, term_hash)} for query terms present in the corpus
@@ -73,32 +135,70 @@ def _query_terms(index: Index, query: str) -> dict[str, tuple[int, float, int]]:
     }
 
 
-def _decode_contribs_iter(idf_map: dict[int, float], conf, avgdl: float):
+def _terms_spec(stats: dict[str, tuple[int, float, int]], qid: str = "q", **kw) -> _Spec:
+    """The match-query spec: one single-term should clause per present
+    term, term-string ascending (the deterministic summation order)."""
+    return _Spec(qid, [_Clause((stats[t][2],), stats[t][1]) for t in sorted(stats)], **kw)
+
+
+def _spec_hashes(spec: _Spec) -> list[int]:
+    return sorted({h for c in spec.clauses for h in c.hashes})
+
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated aranges [s, s + n) for each (s, n) pair."""
+    offs = np.cumsum(lens) - lens
+    return np.repeat(starts - offs, lens) + np.arange(int(lens.sum()))
+
+
+def _alive(ids: np.ndarray, dead: np.ndarray | None) -> np.ndarray | None:
+    """Mask of ids not in the sorted dead-id array (Index.dead_ids), or
+    None when nothing is dead."""
+    if dead is None or not len(dead):
+        return None
+    pos = np.searchsorted(dead, ids)
+    pos[pos >= len(dead)] = len(dead) - 1
+    return dead[pos] != ids
+
+
+def _decode_impacts(pdf: pd.DataFrame, conf, avgdl: float):
+    """Batched decode of posting-block rows (codec.decode_blocks_concat:
+    three vectorized passes over the concatenated streams, bit-identical
+    to per-block decode). Returns (ids, tfs, dls, impacts, counts, starts):
+    impacts are the term-independent BM25 factors, counts/starts each
+    block's posting count and offset into the arrays."""
+    counts = pdf["n_docs"].to_numpy(dtype=np.int64)
+    ids, tfs, dls, starts = codec.decode_blocks_concat(
+        pdf["doc_ids"], pdf["tfs"], pdf["doc_lens"], counts, conf.quantize_norms
+    )
+    imp = codec.bm25_impact(tfs, dls, avgdl, conf.k1, conf.b)
+    return ids, tfs, dls, imp, counts, starts
+
+
+def _seed_contribs(idf_map: dict[int, float], index: Index):
     """mapInPandas fn over posting-block rows -> (term_hash, doc_id,
-    contrib). idf_map is keyed by term_hash. Used by the θ-seed jobs."""
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
+    contrib) of LIVE docs, idf_map keyed by term_hash — the θ-seed jobs'
+    decode. A dead doc must not set θ: it never reaches the result set, so
+    a θ taken from its contribution could exceed the true k-th best live
+    score and over-prune."""
+    conf, avgdl, dead = index.conf, index.avgdl, index.dead_ids
 
     def fn(batches):
         for pdf in batches:
             if not len(pdf):
-                yield pd.DataFrame({"term_hash": [], "doc_id": [], "contrib": []})
                 continue
-            counts = pdf["n_docs"].to_numpy(dtype=np.int64)
-            ids, tfs, dls, _ = codec.decode_blocks_concat(
-                pdf["doc_ids"], pdf["tfs"], pdf["doc_lens"], counts, qn
-            )
-            contribs = np.repeat(
-                pdf["term_hash"].map(idf_map).to_numpy(dtype=np.float64), counts
-            ) * codec.bm25_impact(tfs, dls, avgdl, k1, b)
-            yield pd.DataFrame(
+            ids, _, _, imp, counts, _ = _decode_impacts(pdf, conf, avgdl)
+            th = pdf["term_hash"]
+            idf = th.map(idf_map).to_numpy(dtype=np.float64)
+            out = pd.DataFrame(
                 {
-                    "term_hash": np.repeat(
-                        pdf["term_hash"].to_numpy(dtype=np.int64), counts
-                    ),
+                    "term_hash": np.repeat(th.to_numpy(dtype=np.int64), counts),
                     "doc_id": ids,
-                    "contrib": contribs,
+                    "contrib": np.repeat(idf, counts) * imp,
                 }
             )
+            alive = _alive(ids, dead)
+            yield out if alive is None else out[alive]
 
     return fn
 
@@ -107,24 +207,31 @@ def _interval_prune(
     tmins: np.ndarray,
     tmaxs: np.ndarray,
     timps: np.ndarray,
-    tranks: np.ndarray,
-    n_terms: int,
+    crows: np.ndarray,
+    n_clauses: int,
     theta: float,
     msm: int = 1,
+    required: np.ndarray | None = None,
+    should: np.ndarray | None = None,
 ):
-    """Block-max WAND at elementary-interval granularity (pure metadata math).
+    """Block-max WAND at elementary-interval granularity (pure metadata
+    math). One row per (block, clause) pair: its doc range, its bound
+    `timps` (idf·max_impact) and its clause `crows`; required/should are
+    per-clause masks (None: no required clause / every clause is should).
 
-    Elementary doc-range intervals from the blocks' [min,max] spans;
-    UB(interval) = Σ_t max(idf_t·max_impact of t's blocks covering it). A doc
-    in an interval with UB < θ cannot reach the top-k; every doc in a kept
-    interval has ALL its blocks decoded (any block containing it overlaps its
-    interval), so survivors get exact scores.
-
-    msm > 1 adds the conjunctive coverage prune: a doc matching at least
-    `msm` distinct query terms must live in an interval covered by blocks of
-    at least `msm` distinct terms, so under-covered intervals are dropped
-    (for operator=and, msm = n_terms — the intersection prune, the
-    non-positional analogue of the phrase range prune).
+    Elementary doc-range intervals come from the blocks' [min,max] spans.
+    An interval is dropped when
+      - θ-UB: UB(interval) < θ, UB = Σ over clauses of the clause's
+        largest bound among blocks covering it (also sound, if loose, for
+        a max combine: contributions are non-negative);
+      - required coverage: some required clause has no block covering it
+        (for operator=and / bool must+filter — the intersection prune, the
+        non-positional analogue of the phrase range prune);
+      - should-msm: fewer than msm distinct should clauses cover it.
+    A doc in a dropped interval provably misses the top-k or the match
+    constraints. Every doc in a kept interval has ALL its blocks decoded
+    (any block containing it overlaps its interval), so survivors get exact
+    scores. Exclusion can't prune here (absence isn't visible in metadata).
 
     Returns (bounds, interval_keep, block_keep) or None when everything is
     pruned."""
@@ -134,190 +241,257 @@ def _interval_prune(
         return None
     lo = np.searchsorted(bounds, tmins, side="right") - 1
     hi = np.searchsorted(bounds, tmaxs, side="right") - 1
-    ub = np.zeros((n_terms, n_int), dtype=np.float64)
-    for bi in range(len(tmins)):  # blocks per bucket are few
-        t, s, e = tranks[bi], lo[bi], hi[bi]
-        seg = ub[t, s : e + 1]
-        np.maximum(seg, timps[bi], out=seg)
-    interval_keep = ub.sum(axis=0) >= theta
-    if msm > 1:
-        interval_keep &= (ub > 0.0).sum(axis=0) >= msm
+    lens = hi - lo + 1
+    cells = (np.repeat(crows, lens), _ranges(lo, lens))
+    ub = np.zeros((n_clauses, n_int), dtype=np.float64)
+    np.maximum.at(ub, cells, np.repeat(timps, lens))
+    cov = np.zeros((n_clauses, n_int), dtype=bool)
+    cov[cells] = True
+    interval_keep = np.ones(n_int, dtype=bool)
+    if theta > 0.0:
+        interval_keep &= ub.sum(axis=0) >= theta
+    if required is not None and required.any():
+        interval_keep &= cov[required].all(axis=0)
+    if msm > 0:
+        interval_keep &= (cov if should is None else cov[should]).sum(axis=0) >= msm
     if not interval_keep.any():
         return None
-    block_keep = np.zeros(len(tmins), dtype=bool)
-    for bi in range(len(tmins)):
-        if interval_keep[lo[bi] : hi[bi] + 1].any():
-            block_keep[bi] = True
+    kept_before = np.concatenate(([0], np.cumsum(interval_keep)))
+    block_keep = kept_before[hi + 1] > kept_before[lo]
     return bounds, interval_keep, block_keep
 
 
-def _score_bucket_fn(
-    idf_map: dict[int, float],
-    term_rank: dict[int, int],
+def _clause_columns(q: _Spec):
+    """A spec's clauses as columns: (weight, pooled, required, excluded,
+    should) arrays — weight is the idf, 0.0 for an unscored clause — and
+    whether msm bites, i.e. asks more than every posting already meets."""
+    cs = q.clauses
+    should = np.asarray([c.should for c in cs])
+    return (
+        np.asarray([c.idf if c.scored else 0.0 for c in cs]),
+        np.asarray([len(c.hashes) > 1 for c in cs]),
+        np.asarray([c.required for c in cs]),
+        np.asarray([c.excluded for c in cs]),
+        should,
+        q.msm > (1 if should.all() else 0),
+    )
+
+
+def _bm25_match_bucket(
+    pdf: pd.DataFrame,
+    queries: list[_Spec],
     conf,
     avgdl: float,
-    k: int,
-    theta: float,
-    msm: int = 1,
-    after: tuple[float, int] | None = None,
-    _probe: dict | None = None,
+    k: int | None,
     dead: np.ndarray | None = None,
-):
-    """applyInPandas fn: one bucket's blocks (all query terms) -> local top-k.
+    _probe: dict | None = None,
+) -> dict:
+    """One bucket's posting-block rows -> {query_id: (doc_ids, scores)}
+    local top-k per spec (None where the bucket holds no hit). The decode is
+    SHARED across specs: a block is decoded at most once per bucket however
+    many specs touch its term.
 
-    idf_map/term_rank are keyed by term_hash; term_rank orders by the TERM
-    STRING ascending (computed driver-side from term_stats), preserving the
-    oracle's deterministic summation order even though blocks only carry
-    hashes. Rows sorted by (doc_id, rank), summed with np.add.reduceat.
+    Per spec, before any decode: the bucket's `_theta_b` (if the blocks
+    frame carries one; NULL or non-finite prunes the whole bucket — the
+    caller proved nothing in it reaches the top-k) raises θ, and
+    _interval_prune drops intervals when θ > 0, a clause is required, or msm
+    exceeds what every posting already satisfies. Then one batched decode,
+    the live-docs filter (Index.dead_ids — before the local cut: a dead doc
+    in a bucket's local k would displace a live doc of the global top-k),
+    the docs of pruned intervals dropped (their partial scores are
+    incomplete and provably out), pooling, the per-doc reduce in (doc_id,
+    clause) order, the required/excluded/msm checks, the search_after
+    cursor, and the local top-k (score desc, doc_id asc)."""
+    out = dict.fromkeys(q.qid for q in queries)
+    theta_b = 0.0
+    if "_theta_b" in pdf.columns:
+        tb = pdf["_theta_b"].iloc[0]
+        if tb is None or not np.isfinite(tb):
+            return out
+        theta_b = float(tb)
+    th = pdf["term_hash"].to_numpy(dtype=np.int64)
+    by_hash = np.argsort(th, kind="stable")
+    uniq, first, n_rows = np.unique(th[by_hash], return_index=True, return_counts=True)
+    rows_of = {int(h): by_hash[s : s + n] for h, s, n in zip(uniq, first, n_rows)}
+    tmins = pdf["min_doc"].to_numpy(dtype=np.int64)
+    tmaxs = pdf["max_doc"].to_numpy(dtype=np.int64)
+    max_imp = pdf["max_impact"].to_numpy(dtype=np.float64)
+    # blocks encoded at an older avgdl keep a sound upper bound when scaled
+    # by max(1, avgdl/avgdl0) (see schema.POSTINGS.avgdl0)
+    drift = np.maximum(1.0, avgdl / pdf["avgdl0"].to_numpy(dtype=np.float64))
 
-    msm > 1 (ES minimum_should_match / operator=and): only docs matching at
-    least msm distinct query terms survive — intervals under-covered at the
-    block-metadata level are pruned before any decode, and the per-doc
-    distinct-term count (row count per doc: a doc appears at most once per
-    term, blocks partition doc ranges) filters the rest post-sum.
-
-    Per-bucket θ (round 5, function_score skew pruning): if the incoming
-    blocks frame carries a `_theta_b` column (one value per bucket, joined
-    on upstream), the EFFECTIVE θ for this bucket is max(theta, _theta_b);
-    a non-finite/NULL _theta_b prunes the whole bucket before any metadata
-    work (the caller has proven no doc in it can reach the global top-k)."""
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
-
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": np.int64, "score": np.float64}
-    )
-    n_terms = len(term_rank)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        theta_eff = theta
-        if "_theta_b" in pdf.columns:
-            tb = pdf["_theta_b"].iloc[0]
-            # NULL (bucket absent from the extrema frame: no rankable docs)
-            # and +inf (bound proves the bucket can't reach top-k) both
-            # prune the entire bucket
-            if tb is None or not np.isfinite(tb):
-                return empty
-            theta_eff = max(theta_eff, float(tb))
-        keep_mask = None  # block-level decode filter
-        bounds = None  # elementary interval bounds (kept intervals only)
-        interval_keep = None
-        if theta_eff > 0.0 or msm > 1:
-            tmins = pdf["min_doc"].to_numpy(dtype=np.int64)
-            tmaxs = pdf["max_doc"].to_numpy(dtype=np.int64)
-            # blocks encoded at an older avgdl keep a sound upper bound when
-            # scaled by max(1, avgdl/avgdl0) (see schema.POSTINGS.avgdl0)
-            drift = np.maximum(
-                1.0, avgdl / pdf["avgdl0"].to_numpy(dtype=np.float64)
-            )
-            timps = (
-                pdf["term_hash"].map(idf_map).to_numpy(dtype=np.float64)
-                * pdf["max_impact"].to_numpy(dtype=np.float64)
-                * drift
-            )
-            tranks = pdf["term_hash"].map(term_rank).to_numpy(dtype=np.int64)
+    plans = []
+    need = np.zeros(len(pdf), dtype=bool)
+    for q in queries:
+        parts = [
+            (rows_of[h], ci)
+            for ci, c in enumerate(q.clauses)
+            for h in c.hashes
+            if h in rows_of
+        ]
+        if not parts:
+            continue
+        br = np.concatenate([r for r, _ in parts])
+        bc = np.concatenate([np.full(len(r), ci, dtype=np.int64) for r, ci in parts])
+        weight, pooled, req, _, shd, msm_bites = cols = _clause_columns(q)
+        theta = max(q.theta, theta_b)
+        interval = None
+        if theta > 0.0 or req.any() or msm_bites:
+            # a pooled clause's tf sums over members, so no single member's
+            # max_impact bounds it; impact < 1 always does
+            ub = np.where(pooled[bc], weight[bc], weight[bc] * max_imp[br] * drift[br])
             pruned = _interval_prune(
-                tmins, tmaxs, timps, tranks, n_terms, theta_eff, msm
+                tmins[br], tmaxs[br], ub, bc, len(q.clauses), theta,
+                q.msm, req, shd,
             )
             if pruned is None:
-                return empty
-            bounds, interval_keep, keep_mask = pruned
+                continue
+            bounds, interval_keep, block_keep = pruned
+            br, bc = br[block_keep], bc[block_keep]
+            interval = (bounds, interval_keep)
+        need[br] = True
+        plans.append((q, br, bc, interval, cols))
+    if _probe is not None:
+        _probe["blocks_total"] = _probe.get("blocks_total", 0) + len(pdf)
+        _probe["blocks_decoded"] = _probe.get("blocks_decoded", 0) + int(need.sum())
+    if not plans:
+        return out
 
-        if _probe is not None:
-            _probe["blocks_total"] = _probe.get("blocks_total", 0) + len(pdf)
-        sub = pdf if keep_mask is None else pdf.iloc[np.nonzero(keep_mask)[0]]
-        if not len(sub):
-            return empty
-        if _probe is not None:
-            _probe["blocks_decoded"] = _probe.get("blocks_decoded", 0) + len(sub)
-        # batched decode (codec.decode_blocks_concat): three vectorized
-        # passes over the kept blocks' concatenated streams instead of a
-        # Python call per block row — bit-identical values, and the per-doc
-        # float64 ops below are unchanged (same contrib = idf * impact
-        # multiply, same (doc_id, term-rank-asc) summation order)
-        counts = sub["n_docs"].to_numpy(dtype=np.int64)
-        ids, tfs, dls, _ = codec.decode_blocks_concat(
-            sub["doc_ids"], sub["tfs"], sub["doc_lens"], counts, qn
-        )
-        terms = np.repeat(
-            sub["term_hash"].map(term_rank).to_numpy(dtype=np.int32), counts
-        )
-        contribs = np.repeat(
-            sub["term_hash"].map(idf_map).to_numpy(dtype=np.float64), counts
-        ) * codec.bm25_impact(tfs, dls, avgdl, k1, b)
-        if dead is not None and len(dead):
-            # live-docs filter (Index.dead_ids): must run BEFORE the local
-            # top-k cut — a dead doc in a bucket's local k would displace a
-            # live doc that belongs in the global top-k. `dead` is sorted.
-            pos = np.searchsorted(dead, ids)
-            pos[pos >= len(dead)] = len(dead) - 1
-            alive = dead[pos] != ids
-            if not alive.any():
-                return empty
-            ids, terms, contribs = ids[alive], terms[alive], contribs[alive]
-        if interval_keep is not None:
-            # drop docs living in pruned intervals (their partial scores are
-            # incomplete AND provably below θ)
-            iv = np.searchsorted(bounds, ids, side="right") - 1
-            doc_keep = (iv >= 0) & (iv < len(interval_keep))
-            doc_keep[doc_keep] &= interval_keep[iv[doc_keep]]
-            if not doc_keep.any():
-                return empty
-            ids, terms, contribs = ids[doc_keep], terms[doc_keep], contribs[doc_keep]
-        # sort by (doc_id, term): reduceat then sums per doc in term-asc order
-        order = np.lexsort((terms, ids))
-        ids, contribs = ids[order], contribs[order]
-        starts = np.concatenate(([0], np.nonzero(ids[1:] != ids[:-1])[0] + 1))
-        doc_ids = ids[starts]
-        scores = np.add.reduceat(contribs, starts)
-        if msm > 1:
-            # rows per doc == distinct matching terms (one row per term/doc)
-            counts = np.diff(np.append(starts, len(ids)))
-            ok = counts >= msm
-            if not ok.any():
-                return empty
-            doc_ids, scores = doc_ids[ok], scores[ok]
-        if after is not None:
+    need_idx = np.nonzero(need)[0]
+    ids, tfs, dls, imp, counts, starts = _decode_impacts(pdf.iloc[need_idx], conf, avgdl)
+    slot = np.zeros(len(pdf), dtype=np.int64)
+    slot[need_idx] = np.arange(len(need_idx))
+    alive = _alive(ids, dead)
+    for q, br, bc, interval, (weight, pooled, req, exc, shd, msm_bites) in plans:
+        lens = counts[slot[br]]
+        rows = _ranges(starts[slot[br]], lens)
+        cl = np.repeat(bc, lens)
+        keep = None if alive is None else alive[rows]
+        if interval is not None:
+            bounds, interval_keep = interval
+            iv = np.searchsorted(bounds, ids[rows], side="right") - 1
+            in_kept = (iv >= 0) & (iv < len(interval_keep))
+            in_kept[in_kept] &= interval_keep[iv[in_kept]]
+            keep = in_kept if keep is None else keep & in_kept
+        if keep is not None:
+            rows, cl = rows[keep], cl[keep]
+        if not rows.size:
+            continue
+        doc = ids[rows]
+        contrib = weight[cl] * imp[rows]
+        pm = pooled[cl]
+        if pm.any():
+            # SynonymQuery: one (doc, clause) row with the members' summed
+            # tf (exact integer sums in float64; a doc's dl is the same on
+            # every member's row), impact computed after pooling
+            p_doc, p_cl = doc[pm], cl[pm]
+            o = np.lexsort((p_doc, p_cl))
+            p_doc, p_cl = p_doc[o], p_cl[o]
+            new_row = (p_doc[1:] != p_doc[:-1]) | (p_cl[1:] != p_cl[:-1])
+            firsts = np.concatenate(([0], np.nonzero(new_row)[0] + 1))
+            p_rows = rows[pm][o]
+            tf_pool = np.add.reduceat(tfs[p_rows].astype(np.float64), firsts)
+            imp_pool = codec.bm25_impact(
+                tf_pool, dls[p_rows[firsts]], avgdl, conf.k1, conf.b
+            )
+            p_cl = p_cl[firsts]
+            doc = np.concatenate((doc[~pm], p_doc[firsts]))
+            contrib = np.concatenate((contrib[~pm], weight[p_cl] * imp_pool))
+            cl = np.concatenate((cl[~pm], p_cl))
+        # sort by (doc_id, clause): reduceat then combines per doc in clause
+        # order (unscored clauses add exact +0.0s, which never perturb an
+        # IEEE running sum)
+        order = np.lexsort((cl, doc))
+        doc, cl, contrib = doc[order], cl[order], contrib[order]
+        firsts = np.concatenate(([0], np.nonzero(doc[1:] != doc[:-1])[0] + 1))
+        doc_ids = doc[firsts]
+        reduce = np.maximum if q.combine == "max" else np.add
+        scores = reduce.reduceat(contrib, firsts)
+        # one row per (doc, clause), so per-doc flag sums count clauses
+        ok = np.ones(len(doc_ids), dtype=bool)
+        if req.any():
+            ok &= np.add.reduceat(req[cl], firsts) == req.sum()
+        if exc.any():
+            ok &= np.add.reduceat(exc[cl], firsts) == 0
+        if msm_bites:
+            ok &= np.add.reduceat(shd[cl], firsts) >= q.msm
+        if q.after is not None:
             # search_after cursor: keep docs strictly after (s_a, d_a) in
             # (score desc, doc_id asc) rank order. Scores are deterministic
             # float64 (fixed summation order), so == against a cursor taken
             # from a previous page of THIS engine is exact
-            s_a, d_a = after
-            m = (scores < s_a) | ((scores == s_a) & (doc_ids > d_a))
-            if not m.any():
-                return empty
-            doc_ids, scores = doc_ids[m], scores[m]
-        # local top-k: score desc, doc_id asc
+            s_a, d_a = q.after
+            ok &= (scores < s_a) | ((scores == s_a) & (doc_ids > d_a))
+        if not ok.any():
+            continue
+        doc_ids, scores = doc_ids[ok], scores[ok]
         sel = np.lexsort((doc_ids, -scores))[:k]
-        return pd.DataFrame({"doc_id": doc_ids[sel], "score": scores[sel]})
+        out[q.qid] = (doc_ids[sel], scores[sel])
+    return out
+
+
+def _hits_fn(kernel, spec, **kw):
+    """applyInPandas fn: one query's local hits (doc_id, score) from a
+    bucket kernel (_bm25_match_bucket or _phrase_match_bucket, `kw` its
+    remaining arguments) — a batch of one."""
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        r = kernel(pdf, [spec], **kw).get(spec[0])
+        return _EMPTY_HITS if r is None else pd.DataFrame({"doc_id": r[0], "score": r[1]})
 
     return fn
 
 
-def _maps_of(stats: dict[str, tuple[int, float, int]]):
-    """(idf_map, term_rank) keyed by term_hash; rank = term-string ascending
-    (the deterministic summation order)."""
-    idf_map = {h: idf for (_, idf, h) in stats.values()}
-    term_rank = {stats[t][2]: i for i, t in enumerate(sorted(stats))}
-    return idf_map, term_rank
+def _batch_fn(kernel, specs, **kw):
+    """applyInPandas fn: every query's local hits (_BATCH_LOCAL) from one
+    bucket kernel call over the whole batch."""
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        hits = [(q, r) for q, r in kernel(pdf, specs, **kw).items() if r is not None]
+        if not hits:
+            return _EMPTY_HITS.assign(query_id="")
+        return pd.DataFrame(
+            {
+                "query_id": np.repeat([q for q, _ in hits], [len(r[0]) for _, r in hits]),
+                "doc_id": np.concatenate([r[0] for _, r in hits]),
+                "score": np.concatenate([r[1] for _, r in hits]),
+            }
+        )
+
+    return fn
 
 
-def _run_scored(
-    index: Index,
-    idf_map: dict[int, float],
-    term_rank: dict[int, int],
-    k: int,
-    theta: float,
-    msm: int = 1,
-    after: tuple[float, int] | None = None,
+def _ranked_batch(blocks: DataFrame, fn, k: int) -> DataFrame:
+    """Batch results (_BATCH_HIT): one bucket stage running the _batch_fn
+    `fn` for every query, then a per-query (score desc, doc_id asc) Window
+    rank cut at k."""
+    local = blocks.groupBy("bucket").applyInPandas(fn, schema=_BATCH_LOCAL)
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    return (
+        local.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "doc_id", "score", "rank")
+    )
+
+
+def _bm25_hits(
+    index: Index, spec: _Spec, k: int | None, blocks: DataFrame | None = None
 ) -> DataFrame:
-    blocks = index.postings.filter(F.col("term_hash").isin(list(idf_map)))
-    hits = blocks.groupBy("bucket").applyInPandas(
-        _score_bucket_fn(
-            idf_map, term_rank, index.conf, index.avgdl, k, theta, msm, after,
+    """One spec's local hits, unordered: the IN(term_hash) block scan (or
+    the caller's `blocks`), one bucket Exchange, the BM25 kernel. k=None
+    keeps every match."""
+    if blocks is None:
+        blocks = index.postings.filter(F.col("term_hash").isin(_spec_hashes(spec)))
+    return blocks.groupBy("bucket").applyInPandas(
+        _hits_fn(
+            _bm25_match_bucket, spec, conf=index.conf, avgdl=index.avgdl, k=k,
             dead=index.dead_ids,
         ),
         schema=_HIT,
     )
+
+
+def _top(hits: DataFrame, k: int) -> DataFrame:
     return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -327,16 +501,16 @@ def topk_exact(index: Index, query: str, k: int = 10) -> DataFrame:
     stats = _query_terms(index, query)
     if not stats:
         return spark.createDataFrame([], _HIT)
-    idf_map, term_rank = _maps_of(stats)
-    return _run_scored(index, idf_map, term_rank, k, theta=0.0)
+    return _top(_bm25_hits(index, _terms_spec(stats), k), k)
 
 
 def _theta_seed(
     index: Index, term_hash: int, idf: float, k: int, _probe: dict | None = None
 ) -> float:
-    """k-th largest single-term BM25 contribution of `term` — a sound lower
-    bound for the final k-th best score of any query containing it (every doc
-    with the term scores at least its own contribution).
+    """k-th largest single-term BM25 contribution of `term` among live docs
+    — a sound lower bound for the final k-th best score of any query
+    containing it (every doc with the term scores at least its own
+    contribution).
 
     Bounded decode (metadata-first): blocks are fetched in descending
     idf·max_impact·drift order via a distributed TakeOrdered over METADATA
@@ -364,17 +538,7 @@ def _theta_seed(
         blocks = index.postings.filter(
             (F.col("term_hash") == term_hash) & F.col("block_id").isin(ids)
         )
-        seed = blocks.mapInPandas(
-            _decode_contribs_iter({term_hash: idf}, index.conf, index.avgdl),
-            schema=_DECODED,
-        )
-        if index.dead_ids is not None and len(index.dead_ids):
-            # a dead doc must not set θ: it never reaches the result set, so
-            # a θ taken from its contribution could exceed the true k-th
-            # best LIVE score and over-prune
-            seed = seed.filter(
-                ~F.col("doc_id").isin([int(d) for d in index.dead_ids])
-            )
+        seed = blocks.mapInPandas(_seed_contribs({term_hash: idf}, index), schema=_DECODED)
         kth = seed.orderBy(F.desc("contrib")).limit(k).collect()
         best = np.asarray([float(r["contrib"]) for r in kth])
         exhausted = len(top) < m  # fetched every block the term has
@@ -407,7 +571,6 @@ def topk_wand(
     stats = _query_terms(index, query)
     if not stats:
         return spark.createDataFrame([], _HIT)
-    idf_map, term_rank = _maps_of(stats)
     if seed_min_blocks is None:
         seed_min_blocks = THETA_SEED_MIN_BLOCKS
 
@@ -420,7 +583,7 @@ def topk_wand(
     rterm = min(stats, key=lambda t: (stats[t][0], t))
     if stats[rterm][0] > k and est_blocks >= seed_min_blocks:
         theta = _theta_seed(index, stats[rterm][2], stats[rterm][1], k)
-    return _run_scored(index, idf_map, term_rank, k, theta)
+    return _top(_bm25_hits(index, _terms_spec(stats, theta=theta), k), k)
 
 
 def topk_match(
@@ -461,8 +624,7 @@ def topk_match(
     stats = _query_terms(index, query)
     if msm > len(stats):  # a required term is absent from the corpus
         return spark.createDataFrame([], _HIT)
-    idf_map, term_rank = _maps_of(stats)
-    return _run_scored(index, idf_map, term_rank, k, theta=0.0, msm=msm)
+    return _top(_bm25_hits(index, _terms_spec(stats, msm=msm), k), k)
 
 
 def topk_after(
@@ -490,137 +652,8 @@ def topk_after(
     stats = _query_terms(index, query)
     if not stats:
         return spark.createDataFrame([], _HIT)
-    idf_map, term_rank = _maps_of(stats)
-    return _run_scored(index, idf_map, term_rank, k, theta=0.0, after=after)
+    return _top(_bm25_hits(index, _terms_spec(stats, after=after), k), k)
 
-
-def _bool_bucket_fn(
-    idf_map: dict[int, float],
-    term_rank: dict[int, int],
-    roles: dict[int, tuple[bool, bool, bool, bool]],
-    conf,
-    avgdl: float,
-    k: int,
-    n_required: int,
-    msm: int,
-    dead: np.ndarray | None = None,
-):
-    """applyInPandas fn: one bucket's blocks (every clause term, all roles)
-    -> local top-k under Lucene BooleanQuery semantics.
-
-    roles: term_hash -> (required, scored, excluded, should). Buckets
-    partition doc space, so a doc's postings for EVERY clause term live in
-    this one group: required presence, must_not absence, and the
-    minimum_should_match count are all decidable locally, and score (sum of
-    the SCORED terms' BM25 contributions, term-ascending) is exact.
-
-    Metadata prune before any decode: an interval must be covered by blocks
-    of ALL n_required required terms (a required term with no block covering
-    a doc range cannot appear in those docs) and by >= msm distinct should
-    terms. Exclusion can't prune at metadata (absence isn't visible there);
-    excluded terms' blocks in kept intervals decode so their docs drop."""
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": np.int64, "score": np.float64}
-    )
-    term_row = {t: i for i, t in enumerate(sorted(roles))}
-    req_rows = [term_row[t] for t, r in roles.items() if r[0]]
-    shd_rows = [term_row[t] for t, r in roles.items() if r[3]]
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        tmins = pdf["min_doc"].to_numpy(dtype=np.int64)
-        tmaxs = pdf["max_doc"].to_numpy(dtype=np.int64)
-        th_arr = pdf["term_hash"].to_numpy(dtype=np.int64)
-        bounds = np.unique(np.concatenate((tmins, tmaxs + 1)))
-        n_int = len(bounds) - 1
-        if n_int <= 0:
-            return empty
-        lo = np.searchsorted(bounds, tmins, side="right") - 1
-        hi = np.searchsorted(bounds, tmaxs, side="right") - 1
-        cov = np.zeros((len(term_row), n_int), dtype=bool)
-        for bi in range(len(th_arr)):
-            cov[term_row[int(th_arr[bi])], lo[bi] : hi[bi] + 1] = True
-        interval_keep = np.ones(n_int, dtype=bool)
-        if n_required:
-            interval_keep &= cov[req_rows].sum(axis=0) == n_required
-        if msm > 0:
-            interval_keep &= (
-                cov[shd_rows].sum(axis=0) >= msm
-                if shd_rows
-                else np.zeros(n_int, dtype=bool)
-            )
-        if not interval_keep.any():
-            return empty
-
-        keep_mask = np.fromiter(
-            (interval_keep[lo[bi] : hi[bi] + 1].any() for bi in range(len(th_arr))),
-            dtype=bool,
-            count=len(th_arr),
-        )
-        if not keep_mask.any():
-            return empty
-        sub = pdf.iloc[np.nonzero(keep_mask)[0]]
-        # batched decode (codec.decode_blocks_concat) — same values and the
-        # same float64 contrib arithmetic as the per-block loop: unscored
-        # blocks get an exact 0.0 idf factor, and 0.0 * impact is +0.0
-        # elementwise, identical to the old np.zeros fill
-        counts = sub["n_docs"].to_numpy(dtype=np.int64)
-        ids, tfs, dls, _ = codec.decode_blocks_concat(
-            sub["doc_ids"], sub["tfs"], sub["doc_lens"], counts, qn
-        )
-        sub_th = sub["term_hash"].to_numpy(dtype=np.int64)
-        role_rows = np.asarray([roles[int(t)] for t in sub_th], dtype=np.int32)
-        ranks = np.repeat(
-            sub["term_hash"].map(term_rank).to_numpy(dtype=np.int32), counts
-        )
-        idf_per_block = np.asarray(
-            [idf_map[int(t)] if role_rows[i, 1] else 0.0 for i, t in enumerate(sub_th)],
-            dtype=np.float64,
-        )
-        contribs = np.repeat(idf_per_block, counts) * codec.bm25_impact(
-            tfs, dls, avgdl, k1, b
-        )
-        reqf = np.repeat(role_rows[:, 0], counts)
-        shdf = np.repeat(role_rows[:, 3], counts)
-        excf = np.repeat(role_rows[:, 2], counts)
-        iv = np.searchsorted(bounds, ids, side="right") - 1
-        doc_keep = (iv >= 0) & (iv < n_int)
-        doc_keep[doc_keep] &= interval_keep[iv[doc_keep]]
-        if not doc_keep.any():
-            return empty
-        ids, ranks, contribs = ids[doc_keep], ranks[doc_keep], contribs[doc_keep]
-        reqf, shdf, excf = reqf[doc_keep], shdf[doc_keep], excf[doc_keep]
-        # scored terms rank lowest (term-ascending), so summing ALL rows in
-        # rank order keeps the oracle's float64 order: the unscored rows add
-        # exact 0.0s, which never perturb an IEEE running sum
-        order = np.lexsort((ranks, ids))
-        ids, contribs = ids[order], contribs[order]
-        reqf, shdf, excf = reqf[order], shdf[order], excf[order]
-        starts = np.concatenate(([0], np.nonzero(ids[1:] != ids[:-1])[0] + 1))
-        doc_ids = ids[starts]
-        scores = np.add.reduceat(contribs, starts)
-        ok = np.ones(len(doc_ids), dtype=bool)
-        if n_required:
-            ok &= np.add.reduceat(reqf, starts) == n_required
-        ok &= np.add.reduceat(excf, starts) == 0
-        if msm > 0:
-            ok &= np.add.reduceat(shdf, starts) >= msm
-        if not ok.any():
-            return empty
-        doc_ids, scores = doc_ids[ok], scores[ok]
-        if dead is not None and len(dead):
-            # live-docs filter (Index.dead_ids), same contract as the WAND
-            # kernel: must run BEFORE the local top-k cut. `dead` is sorted.
-            pos = np.searchsorted(dead, doc_ids)
-            pos[pos >= len(dead)] = len(dead) - 1
-            alive = dead[pos] != doc_ids
-            if not alive.any():
-                return empty
-            doc_ids, scores = doc_ids[alive], scores[alive]
-        sel = np.lexsort((doc_ids, -scores))[:k]
-        return pd.DataFrame({"doc_id": doc_ids[sel], "score": scores[sel]})
-
-    return fn
 
 
 def topk_bool(
@@ -709,21 +742,19 @@ def topk_bool(
     # oracle uses); the remaining (filter-only / excluded) terms after, in
     # term order for stability
     rest = sorted(t for t in stats if t not in present_scored)
-    term_rank = {stats[t][2]: i for i, t in enumerate(present_scored + rest)}
-    idf_map = {stats[t][2]: stats[t][1] for t in present_scored}
-    roles = {
-        stats[t][2]: (t in required, t in present_scored, t in not_t, t in present_should)
-        for t in stats
-    }
-    blocks = index.postings.filter(F.col("term_hash").isin(list(roles)))
-    hits = blocks.groupBy("bucket").applyInPandas(
-        _bool_bucket_fn(
-            idf_map, term_rank, roles, index.conf, index.avgdl, k,
-            len(required), msm, dead=index.dead_ids,
-        ),
-        schema=_HIT,
+    spec = _Spec(
+        "q",
+        [
+            _Clause(
+                (stats[t][2],), stats[t][1], required=t in required,
+                scored=t in present_scored, excluded=t in not_t,
+                should=t in present_should,
+            )
+            for t in present_scored + rest
+        ],
+        msm=msm,
     )
-    return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _top(_bm25_hits(index, spec, k), k)
 
 
 def _batch_seed_round(
@@ -770,9 +801,7 @@ def _batch_seed_round(
     # per BUCKET, not per term, so a bare isin(block_ids) would decode
     # unrelated terms' blocks; the broadcast semi-join keeps the pairing exact
     blocks = index.postings.join(F.broadcast(meta), ["term_hash", "block_id"], "semi")
-    contribs = blocks.mapInPandas(
-        _decode_contribs_iter(seed_terms, index.conf, index.avgdl), schema=_DECODED
-    )
+    contribs = blocks.mapInPandas(_seed_contribs(seed_terms, index), schema=_DECODED)
     kth = (
         contribs.withColumn(
             "rn",
@@ -841,8 +870,9 @@ def topk_batch(
 ) -> DataFrame:
     """Evaluate MANY queries in one pass: (query_id, doc_id, score, rank).
 
-    One scoring job scans the union of all queries' terms, decodes each
-    needed block once, and fans contributions out to every query containing
+    One scoring job scans the union of all queries' terms and runs the BM25
+    kernel over every query's spec at once: each needed block is decoded
+    once per bucket and its contributions fan out to every query containing
     the term — the batch-engine way to run a query log / relevance eval set
     (per-query jobs pay Spark's fixed job latency per query; this pays it
     once).
@@ -854,36 +884,21 @@ def topk_batch(
     byte-identical to prune=False (θ is a sound lower bound per query).
     Determinism identical to topk_exact per query."""
     spark = index.postings.sparkSession
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.StringType(), False),
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("score", T.DoubleType(), False),
-            T.StructField("rank", T.IntegerType(), False),
-        ]
-    )
     qterms = {qid: sorted(set(tokenize(q))) for qid, q in queries.items()}
     all_terms = sorted({t for ts in qterms.values() for t in ts})
     if not all_terms:
-        return spark.createDataFrame([], out_schema)
+        return spark.createDataFrame([], _BATCH_HIT)
     rows = index.term_stats.filter(F.col("term").isin(all_terms)).collect()
-    hash_of = {r["term"]: int(r["term_hash"]) for r in rows}
-    idf_map = {hash_of[r["term"]]: float(r["idf"]) for r in rows}
-    df_map = {r["term"]: int(r["df"]) for r in rows}
-    # query -> its corpus-present term hashes (TERM-STRING-ascending order —
-    # the deterministic summation order); term_hash -> [query_id ...]
-    qpresent = {
-        qid: [hash_of[t] for t in ts if t in hash_of] for qid, ts in qterms.items()
+    stats = {
+        r["term"]: (int(r["df"]), float(r["idf"]), int(r["term_hash"])) for r in rows
     }
-    term_queries: dict[int, list[str]] = {}
-    for qid, hs in qpresent.items():
-        for h in hs:
-            term_queries.setdefault(h, []).append(qid)
-    if not term_queries:
-        return spark.createDataFrame([], out_schema)
-    conf, avgdl = index.conf, index.avgdl
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
-    term_rank = {hash_of[t]: i for i, t in enumerate(sorted(hash_of))}
+    # query -> its corpus-present terms' stats
+    qstats = {
+        qid: {t: stats[t] for t in ts if t in stats} for qid, ts in qterms.items()
+    }
+    qstats = {qid: st for qid, st in qstats.items() if st}
+    if not qstats:
+        return spark.createDataFrame([], _BATCH_HIT)
 
     # ---- per-query θ seeds (two shared jobs for the WHOLE batch; only for
     # queries whose candidate volume clears the cost-based gate) ------------
@@ -891,143 +906,34 @@ def topk_batch(
         seed_min_blocks = THETA_SEED_MIN_BLOCKS
     q_theta: dict[str, float] = {}
     if prune:
-        def _qualifies(ts: list[str]) -> bool:
-            est = sum(df_map[t] for t in ts) / conf.block_size
-            return bool(ts) and est >= seed_min_blocks
-
         rarest = {
-            qid: min(ts, key=lambda t: (df_map[t], t))
-            for qid, ts in (
-                (qid, [t for t in qterms[qid] if t in hash_of]) for qid in qterms
-            )
-            if _qualifies(ts)
+            qid: min(st, key=lambda t: (st[t][0], t))
+            for qid, st in qstats.items()
+            if sum(df for (df, _, _) in st.values()) / index.conf.block_size
+            >= seed_min_blocks
         }
         seed_terms = {
-            hash_of[t]: idf_map[hash_of[t]]
-            for t in {rt for rt in rarest.values()}
-            if df_map[t] > k
+            stats[t][2]: stats[t][1] for t in set(rarest.values()) if stats[t][0] > k
         }
         kth = _batch_theta_seeds(index, seed_terms, k)
         q_theta = {
-            qid: kth[hash_of[rt]]
-            for qid, rt in rarest.items()
-            if hash_of[rt] in kth
+            qid: kth[stats[rt][2]] for qid, rt in rarest.items() if stats[rt][2] in kth
         }
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_blocks = len(pdf)
-        block_terms = pdf["term_hash"].to_numpy(dtype=np.int64)
-        term_blocks: dict[int, np.ndarray] = {}
-        for bi, t in enumerate(block_terms):
-            term_blocks.setdefault(int(t), []).append(bi)
-        term_blocks = {t: np.asarray(ix, dtype=np.int64) for t, ix in term_blocks.items()}
-
-        tmins = pdf["min_doc"].to_numpy(dtype=np.int64)
-        tmaxs = pdf["max_doc"].to_numpy(dtype=np.int64)
-        drift = np.maximum(1.0, avgdl / pdf["avgdl0"].to_numpy(dtype=np.float64))
-        timps = (
-            pdf["term_hash"].map(idf_map).to_numpy(dtype=np.float64)
-            * pdf["max_impact"].to_numpy(dtype=np.float64)
-            * drift
-        )
-
-        # ---- per-query pruning decisions (metadata only) -------------------
-        need = np.zeros(n_blocks, dtype=bool)
-        q_blocks: dict[str, np.ndarray] = {}
-        q_iv: dict[str, tuple] = {}  # qid -> (bounds, interval_keep)
-        for qid in sorted(qpresent):
-            ts = [t for t in qpresent[qid] if t in term_blocks]
-            if not ts:
-                continue
-            bidx = np.concatenate([term_blocks[t] for t in ts])
-            theta = q_theta.get(qid, 0.0)
-            if theta <= 0.0:
-                need[bidx] = True
-                q_blocks[qid] = bidx
-                continue
-            lrank = {t: i for i, t in enumerate(ts)}
-            lranks = np.asarray([lrank[t] for t in block_terms[bidx]], dtype=np.int64)
-            pruned = _interval_prune(
-                tmins[bidx], tmaxs[bidx], timps[bidx], lranks, len(ts), theta
-            )
-            if pruned is None:
-                continue  # this bucket contributes nothing to qid
-            bounds, interval_keep, block_keep = pruned
-            sel = bidx[block_keep]
-            need[sel] = True
-            q_blocks[qid] = sel
-            q_iv[qid] = (bounds, interval_keep)
-
-        # ---- decode each needed block ONCE (batched: one vectorized pass
-        # over the concatenated streams, bit-identical to per-block decode;
-        # per-block views are slices of the shared arrays) -------------------
-        dec_ids: dict[int, np.ndarray] = {}
-        dec_contribs: dict[int, np.ndarray] = {}
-        need_idx = np.nonzero(need)[0]
-        if need_idx.size:
-            sub = pdf.iloc[need_idx]
-            counts = sub["n_docs"].to_numpy(dtype=np.int64)
-            all_ids, all_tfs, all_dls, starts_d = codec.decode_blocks_concat(
-                sub["doc_ids"], sub["tfs"], sub["doc_lens"], counts, qn
-            )
-            all_contribs = np.repeat(
-                sub["term_hash"].map(idf_map).to_numpy(dtype=np.float64), counts
-            ) * codec.bm25_impact(all_tfs, all_dls, avgdl, k1, b)
-            ends_d = np.concatenate((starts_d[1:], [all_ids.size]))
-            for j, bi in enumerate(need_idx):
-                dec_ids[int(bi)] = all_ids[starts_d[j] : ends_d[j]]
-                dec_contribs[int(bi)] = all_contribs[starts_d[j] : ends_d[j]]
-
-        # ---- per-query assembly (same order-determinism as topk_exact) -----
-        out_q, out_d, out_s, out_r = [], [], [], []
-        for qid in sorted(q_blocks):
-            sel = q_blocks[qid]
-            ids = np.concatenate([dec_ids[bi] for bi in sel])
-            contribs = np.concatenate([dec_contribs[bi] for bi in sel])
-            terms = np.concatenate(
-                [
-                    np.full(len(dec_ids[bi]), term_rank[block_terms[bi]], dtype=np.int32)
-                    for bi in sel
-                ]
-            )
-            if qid in q_iv:
-                bounds, interval_keep = q_iv[qid]
-                iv = np.searchsorted(bounds, ids, side="right") - 1
-                doc_keep = (iv >= 0) & (iv < len(interval_keep))
-                doc_keep[doc_keep] &= interval_keep[iv[doc_keep]]
-                if not doc_keep.any():
-                    continue
-                ids, terms, contribs = ids[doc_keep], terms[doc_keep], contribs[doc_keep]
-            order = np.lexsort((terms, ids))
-            ids, contribs = ids[order], contribs[order]
-            starts = np.concatenate(([0], np.nonzero(ids[1:] != ids[:-1])[0] + 1))
-            doc_ids = ids[starts]
-            scores = np.add.reduceat(contribs, starts)
-            sel_k = np.lexsort((doc_ids, -scores))[:k]
-            out_q.extend([qid] * len(sel_k))
-            out_d.append(doc_ids[sel_k])
-            out_s.append(scores[sel_k])
-            out_r.append(np.arange(1, len(sel_k) + 1, dtype=np.int32))
-        if not out_q:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": [], "rank": []}).astype(
-                {"query_id": str, "doc_id": np.int64, "score": np.float64, "rank": np.int32}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": out_q,
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-                "rank": np.concatenate(out_r),
-            }
-        )
-
-    blocks = index.postings.filter(F.col("term_hash").isin(list(term_queries)))
-    local = blocks.groupBy("bucket").applyInPandas(fn, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
+    specs = [
+        _terms_spec(qstats[qid], qid, theta=q_theta.get(qid, 0.0))
+        for qid in sorted(qstats)
+    ]
+    blocks = index.postings.filter(
+        F.col("term_hash").isin(sorted({h for s in specs for h in _spec_hashes(s)}))
+    )
+    return _ranked_batch(
+        blocks,
+        _batch_fn(
+            _bm25_match_bucket, specs, conf=index.conf, avgdl=index.avgdl, k=k,
+            dead=index.dead_ids,
+        ),
+        k,
     )
 
 
@@ -1325,34 +1231,6 @@ def _phrase_match_bucket(
     return out
 
 
-def _phrase_bucket_fn(
-    slot_hashes: list[int],
-    sum_idf: float,
-    conf,
-    avgdl: float,
-    k: int,
-    _probe: dict | None = None,
-    slop: int = 0,
-):
-    """applyInPandas fn: one bucket's positional blocks -> local top-k phrase
-    matches for a single query. Thin wrapper over _phrase_match_bucket (which
-    carries the prune + matching machinery and its scale notes)."""
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": np.int64, "score": np.float64}
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        res = _phrase_match_bucket(
-            pdf, [("q", slot_hashes, sum_idf, slop)], conf, avgdl, k, _probe=_probe
-        )
-        r = res.get("q")
-        if r is None:
-            return empty
-        return pd.DataFrame({"doc_id": r[0], "score": r[1]})
-
-    return fn
-
-
 def topk_phrase(index: Index, phrase: str, k: int = 10, slop: int = 0) -> DataFrame:
     """match_phrase top-k over a POSITIONAL index
     (build_index(positions=True)).
@@ -1393,10 +1271,13 @@ def topk_phrase(index: Index, phrase: str, k: int = 10, slop: int = 0) -> DataFr
         F.col("term_hash").isin(sorted(set(slot_hashes)))
     )
     hits = blocks.groupBy("bucket").applyInPandas(
-        _phrase_bucket_fn(slot_hashes, sum_idf, index.conf, index.avgdl, k, slop=slop),
+        _hits_fn(
+            _phrase_match_bucket, ("q", slot_hashes, sum_idf, slop),
+            conf=index.conf, avgdl=index.avgdl, k=k,
+        ),
         schema=_HIT,
     )
-    return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _top(hits, k)
 
 
 def topk_phrase_batch(
@@ -1418,25 +1299,10 @@ def topk_phrase_batch(
             "phrase queries need a positional index — build with "
             "build_index(..., positions=True)"
         )
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.StringType(), False),
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("score", T.DoubleType(), False),
-            T.StructField("rank", T.IntegerType(), False),
-        ]
-    )
-    local_schema = T.StructType(
-        [
-            T.StructField("query_id", T.StringType(), False),
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("score", T.DoubleType(), False),
-        ]
-    )
     qtoks = {qid: tokenize(p) for qid, p in queries.items()}
     all_terms = sorted({t for ts in qtoks.values() for t in ts})
     if not all_terms:
-        return spark.createDataFrame([], out_schema)
+        return spark.createDataFrame([], _BATCH_HIT)
     rows = index.term_stats.filter(F.col("term").isin(all_terms)).collect()
     stats = {
         r["term"]: (int(r["df"]), float(r["idf"]), int(r["term_hash"])) for r in rows
@@ -1452,38 +1318,12 @@ def topk_phrase_batch(
         plan.append((qid, slot_hashes, sum_idf, int(slop)))
         all_hashes.update(slot_hashes)
     if not plan:
-        return spark.createDataFrame([], out_schema)
-    conf, avgdl = index.conf, index.avgdl
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        res = _phrase_match_bucket(pdf, plan, conf, avgdl, k)
-        qs, ds, ss = [], [], []
-        for qid, _, _, _ in plan:
-            r = res.get(qid)
-            if r is None:
-                continue
-            qs.extend([qid] * len(r[0]))
-            ds.append(r[0])
-            ss.append(r[1])
-        if not qs:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-                {"query_id": str, "doc_id": np.int64, "score": np.float64}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": qs,
-                "doc_id": np.concatenate(ds),
-                "score": np.concatenate(ss),
-            }
-        )
-
+        return spark.createDataFrame([], _BATCH_HIT)
     blocks = index.postings.filter(F.col("term_hash").isin(sorted(all_hashes)))
-    local = blocks.groupBy("bucket").applyInPandas(fn, schema=local_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
+    return _ranked_batch(
+        blocks,
+        _batch_fn(_phrase_match_bucket, plan, conf=index.conf, avgdl=index.avgdl, k=k),
+        k,
     )
 
 
@@ -1637,37 +1477,6 @@ def topk_regexp(
     )
 
 
-def _dismax_bucket_fn(idf_map: dict[int, float], conf, avgdl: float, k: int):
-    """applyInPandas fn: one bucket's expansion-term blocks -> local top-k
-    under dis_max scoring (score = MAX over matched expansions of that
-    term's BM25 contribution — order-independent, so no summation-order
-    bookkeeping is needed)."""
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": np.int64, "score": np.float64}
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return empty
-        counts = pdf["n_docs"].to_numpy(dtype=np.int64)
-        ids, tfs, dls, _ = codec.decode_blocks_concat(
-            pdf["doc_ids"], pdf["tfs"], pdf["doc_lens"], counts, qn
-        )
-        contribs = np.repeat(
-            pdf["term_hash"].map(idf_map).to_numpy(dtype=np.float64), counts
-        ) * codec.bm25_impact(tfs, dls, avgdl, k1, b)
-        order = np.argsort(ids, kind="stable")
-        ids, contribs = ids[order], contribs[order]
-        starts = np.concatenate(([0], np.nonzero(ids[1:] != ids[:-1])[0] + 1))
-        doc_ids = ids[starts]
-        scores = np.maximum.reduceat(contribs, starts)
-        sel = np.lexsort((doc_ids, -scores))[:k]
-        return pd.DataFrame({"doc_id": doc_ids[sel], "score": scores[sel]})
-
-    return fn
-
-
 def ensure_term_grams(index: Index, q: int = GRAM_Q) -> DataFrame:
     """The index's q-gram dictionary sidecar (build.build_term_grams) —
     loaded for on-disk indexes, built once and pinned in executor memory
@@ -1765,12 +1574,12 @@ def topk_fuzzy(
     )
     if not exp:
         return spark.createDataFrame([], _HIT)
-    idf_map = {int(r["term_hash"]): float(r["idf"]) for r in exp}
-    blocks = index.postings.filter(F.col("term_hash").isin(list(idf_map)))
-    hits = blocks.groupBy("bucket").applyInPandas(
-        _dismax_bucket_fn(idf_map, index.conf, index.avgdl, k), schema=_HIT
+    spec = _Spec(
+        "q",
+        [_Clause((int(r["term_hash"]),), float(r["idf"])) for r in exp],
+        combine="max",
     )
-    return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _top(_bm25_hits(index, spec, k), k)
 
 
 def more_like_this(
@@ -2172,18 +1981,12 @@ def topk_function_score(
         if per_bucket and own_ext and theta_df is None:
             ext.unpersist()
 
-    idf_map, term_rank = _maps_of(stats)
-    blocks = index.postings.filter(F.col("term_hash").isin(list(idf_map)))
+    spec = _terms_spec(stats, theta=theta_bm25)
+    blocks = index.postings.filter(F.col("term_hash").isin(_spec_hashes(spec)))
     if theta_df is not None:
         # bucket-count-sized frame: broadcast, no shuffle of the blocks
         blocks = blocks.join(F.broadcast(theta_df), "bucket", "left")
-    base = blocks.groupBy("bucket").applyInPandas(
-        _score_bucket_fn(
-            idf_map, term_rank, index.conf, index.avgdl, None, theta_bm25,
-            dead=index.dead_ids,
-        ),
-        schema=_HIT,
-    )
+    base = _bm25_hits(index, spec, None, blocks)
     out = _ranked(base).select(
         "doc_id", F.round("score", 4).alias("score")
     )
@@ -2672,8 +2475,9 @@ def phrase_scores(index: Index, phrase: str, slop: int = 0) -> DataFrame:
         F.col("term_hash").isin(sorted(set(slot_hashes)))
     )
     return blocks.groupBy("bucket").applyInPandas(
-        _phrase_bucket_fn(
-            slot_hashes, sum_idf, index.conf, index.avgdl, None, slop=slop
+        _hits_fn(
+            _phrase_match_bucket, ("q", slot_hashes, sum_idf, slop),
+            conf=index.conf, avgdl=index.avgdl, k=None,
         ),
         schema=_HIT,
     )
@@ -2743,8 +2547,9 @@ def topk_rescore(
             & (F.col("min_doc") <= hi)
         )
         local = blocks.groupBy("bucket").applyInPandas(
-            _phrase_bucket_fn(
-                slot_hashes, sum_idf, index.conf, index.avgdl, None, slop=slop
+            _hits_fn(
+                _phrase_match_bucket, ("q", slot_hashes, sum_idf, slop),
+                conf=index.conf, avgdl=index.avgdl, k=None,
             ),
             schema=_HIT,
         )
@@ -2883,79 +2688,20 @@ def topk_synonyms(
         member_of[t] = grp
     all_terms = sorted(set().union(*member_of.values()))
     stats = _query_terms(index, " ".join(all_terms))
-    conf, avgdl, n_docs = index.conf, index.avgdl, index.n_docs
-
-    groups: list[tuple[float, frozenset[int]]] = []  # query-token order
-    all_hashes: set[int] = set()
+    clauses = []  # query-token order
     for t in q_tokens:
         present = [m for m in sorted(member_of[t]) if m in stats]
-        if not present:
-            continue
-        df_group = max(stats[m][0] for m in present)
-        hashes = frozenset(stats[m][2] for m in present)
-        groups.append((conf.idf(df_group, n_docs), hashes))
-        all_hashes.update(hashes)
-    if not groups:
+        if present:
+            df_group = max(stats[m][0] for m in present)
+            clauses.append(
+                _Clause(
+                    tuple(sorted({stats[m][2] for m in present})),
+                    index.conf.idf(df_group, index.n_docs),
+                )
+            )
+    if not clauses:
         return spark.createDataFrame([], _HIT)
-
-    k1, b, qn = conf.k1, conf.b, conf.quantize_norms
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": np.int64, "score": np.float64}
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return empty
-        # batched decode once for the whole bucket; per-group views are
-        # row-slices of the shared arrays. Concatenation order within a
-        # group changed from hash-sorted to row order, which cannot change
-        # results: tf pooling is an exact integer sum in float64, a doc's
-        # dl is identical on every row, and the per-doc contrib is computed
-        # AFTER pooling.
-        counts = pdf["n_docs"].to_numpy(dtype=np.int64)
-        aids, atfs, adls, bstarts = codec.decode_blocks_concat(
-            pdf["doc_ids"], pdf["tfs"], pdf["doc_lens"], counts, qn
-        )
-        bends = np.concatenate((bstarts[1:], [aids.size]))
-        th_rows = pdf["term_hash"].to_numpy(dtype=np.int64)
-        ids_all, gr_all, contribs_all = [], [], []
-        for g, (gidf, hashes) in enumerate(groups):
-            rows = np.nonzero(np.isin(th_rows, np.asarray(sorted(hashes), dtype=np.int64)))[0]
-            if not rows.size:
-                continue
-            sel = np.concatenate(
-                [np.arange(bstarts[i], bends[i]) for i in rows]
-            )
-            ids = aids[sel]
-            tfs = atfs[sel].astype(np.float64)
-            dls = adls[sel]
-            order = np.argsort(ids, kind="stable")
-            ids, tfs, dls = ids[order], tfs[order], dls[order]
-            starts = np.concatenate(
-                ([0], np.nonzero(ids[1:] != ids[:-1])[0] + 1)
-            )
-            uids = ids[starts]
-            utf = np.add.reduceat(tfs, starts)
-            udl = dls[starts]
-            ids_all.append(uids)
-            gr_all.append(np.full(len(uids), g, dtype=np.int32))
-            contribs_all.append(gidf * codec.bm25_impact(utf, udl, avgdl, k1, b))
-        if not ids_all:
-            return empty
-        ids = np.concatenate(ids_all)
-        grs = np.concatenate(gr_all)
-        contribs = np.concatenate(contribs_all)
-        order = np.lexsort((grs, ids))
-        ids, contribs = ids[order], contribs[order]
-        starts = np.concatenate(([0], np.nonzero(ids[1:] != ids[:-1])[0] + 1))
-        doc_ids = ids[starts]
-        scores = np.add.reduceat(contribs, starts)
-        sel = np.lexsort((doc_ids, -scores))[:k]
-        return pd.DataFrame({"doc_id": doc_ids[sel], "score": scores[sel]})
-
-    blocks = index.postings.filter(F.col("term_hash").isin(sorted(all_hashes)))
-    hits = blocks.groupBy("bucket").applyInPandas(fn, schema=_HIT)
-    return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _top(_bm25_hits(index, _Spec("q", clauses), k), k)
 
 
 def topk_most_fields(

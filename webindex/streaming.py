@@ -643,15 +643,26 @@ class IncrementalIndexer:
 
         Tombstone events newer than the compaction frontier become
         Index.dead_ids, the analogue of Lucene's in-heap deleted-docs
-        bitmap: the fused BM25 scorer (topk/topk_wand/topk_exact/bool/
-        match/function_score) drops dead docs BEFORE its local top-k cut
-        and θ seeding ignores them, while n_docs/avgdl/df stay as-built —
-        exactly Lucene's behavior until the merge reclaims the docs. The
-        set is driver-scale by construction (deletes since the last
-        compact only). Pending CRAWL batches stay invisible until
-        compact(), the engine's refresh point for additions; query
-        families that bypass the fused scorer (phrase, aggs, term-level)
-        likewise see deletes at compact().
+        bitmap: the BM25 bucket kernel drops dead docs BEFORE its local
+        top-k cut and θ seeding (single and batch) ignores them, while
+        n_docs/avgdl/df stay as-built — exactly Lucene's behavior until
+        the merge reclaims the docs. Families that honour pending deletes:
+        every BM25-scored one — topk/topk_exact/topk_wand/topk_match/
+        topk_after, topk_bool (and its must_not-only match_all),
+        topk_function_score, topk_fuzzy, topk_synonyms, topk_batch,
+        aggs.match_scores and the queries composed from them
+        (simple_query_string term clauses, dis_max, boosting, collapse,
+        most/cross_fields, filtered, terms_set, more_like_this,
+        best_fields, multi_index, rescore's window, aggs.top_hits_agg) —
+        plus topk_pinned. Phrase queries (topk_phrase,
+        topk_phrase_batch, phrase_prefix, phrase_scores), term-level
+        queries (prefix/wildcard/regexp, the prefix clause of
+        match_bool_prefix, span_near, intervals) and the ids-only aggs
+        (matching_doc_ids, ids_for_hashes, ids_with_counts and the aggs
+        built on them) still see deletes only at compact(). The set is
+        driver-scale by construction (deletes since the last compact
+        only). Pending CRAWL batches stay invisible until compact(), the
+        engine's refresh point for additions.
 
         Requires a committed index (compact() at least once); raises
         otherwise."""
